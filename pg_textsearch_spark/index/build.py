@@ -64,6 +64,19 @@ PACK_STATS_SCHEMA = T.StructType([
 POSTINGS_DIR = "postings"
 DOCS_DIR = "docs"
 
+# Postings file layout. Rows are written (term, shard)-sorted in row groups
+# of at most POSTINGS_ROW_GROUP_ROWS rows, so each group's footer `term`
+# min/max bounds a contiguous slice of the dictionary: a serving replica's
+# cold-term fetch reads only the groups whose range can hold the term
+# (the reference's dictionary-page + posting-block reads). Statistics are
+# kept on `term` alone (the only column anything filters on) and dictionary
+# encoding on `segment_id` alone (one value per file; every other column is
+# near-unique per row). Smaller groups cost footer bytes and compression
+# context: at 2 048 rows the zstd level below is what keeps a 7-segment,
+# ~9.7 k-row-per-segment index no larger than the one-group layout.
+POSTINGS_ROW_GROUP_ROWS = 2048
+POSTINGS_ZSTD_LEVEL = 9
+
 
 def _postings_arrow_schema(with_positions: bool):
     import pyarrow as pa
@@ -87,12 +100,15 @@ def _postings_arrow_schema(with_positions: bool):
 
 
 def write_segment_files(seg_dir: str, packed: pd.DataFrame,
-                        docs: pd.DataFrame, with_positions: bool) -> int:
+                        docs: pd.DataFrame, with_positions: bool,
+                        row_group_rows: int) -> int:
     """Write postings + per-segment docmap parquet dirs, return bytes.
 
     Files land under temp names first; the marker is written last by the
     caller (finalize-then-mark). Postings/docs are parquet *directories* so
-    merge jobs can write them with Spark's native writer too."""
+    merge jobs can write them with Spark's native writer too.
+    ``row_group_rows`` is POSTINGS_ROW_GROUP_ROWS as read on the driver
+    that planned the job (the packer factories capture it)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -100,23 +116,31 @@ def write_segment_files(seg_dir: str, packed: pd.DataFrame,
     ddir = os.path.join(seg_dir, DOCS_DIR)
     os.makedirs(pdir, exist_ok=True)
     os.makedirs(ddir, exist_ok=True)
+    # ``packed`` comes (term, shard)-sorted out of pack_postings_frame
     table = pa.Table.from_pandas(packed, schema=_postings_arrow_schema(with_positions),
                                  preserve_index=False)
     ppath = os.path.join(pdir, "part-0.parquet")
     pq.write_table(table, ppath + ".tmp", compression="zstd",
+                   compression_level=POSTINGS_ZSTD_LEVEL,
+                   row_group_size=row_group_rows,
+                   use_dictionary=["segment_id"], write_statistics=["term"],
                    sorting_columns=[pq.SortingColumn(1)])
     os.replace(ppath + ".tmp", ppath)
 
+    # docmap: doc_id-sorted; statistics on doc_id let resolve() skip row
+    # groups. No dictionaries: most columns are unique per row (ids,
+    # content_sha256), where a dictionary only adds an index stream
     dpath = os.path.join(ddir, "part-0.parquet")
     dt = pa.Table.from_pandas(docs, preserve_index=False)
-    pq.write_table(dt, dpath + ".tmp", compression="zstd")
+    pq.write_table(dt, dpath + ".tmp", compression="zstd",
+                   use_dictionary=False, write_statistics=["doc_id"])
     os.replace(dpath + ".tmp", dpath)
     return os.path.getsize(ppath) + os.path.getsize(dpath)
 
 
 def _pack_segment_pdf(pdf: pd.DataFrame, seg_id: str, seg_dir: str,
                       opts: Bm25Options, doc_cols: list[str],
-                      write_marker: bool = True) -> dict:
+                      row_group_rows: int, write_marker: bool = True) -> dict:
     """Flatten one array-packed doc group into a written segment (B5-B10);
     returns the stats dict. ``write_marker=False`` for callers whose resume
     unit is coarser than one written segment (the spill packer's bucket)."""
@@ -159,7 +183,8 @@ def _pack_segment_pdf(pdf: pd.DataFrame, seg_id: str, seg_dir: str,
                                  with_positions=with_positions,
                                  codec=opts.codec)
     packed.insert(0, "segment_id", seg_id)
-    nbytes = write_segment_files(seg_dir, packed, docs, with_positions)
+    nbytes = write_segment_files(seg_dir, packed, docs, with_positions,
+                                 row_group_rows)
 
     dfreqs = packed.groupby("term")["doc_freq"].sum() if len(packed) else pd.Series(dtype=np.int64)
     max_df = int(dfreqs.max()) if len(dfreqs) else 0
@@ -200,8 +225,9 @@ def make_packer(index_path: str, seg_ids: dict[int, str], opts: Bm25Options,
     carried through the tokenizer pass and written into the per-segment
     docmap — the docmap needs NO second scan of the source."""
     doc_cols = doc_cols or []
+    rg_rows = POSTINGS_ROW_GROUP_ROWS
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key, pdf):
         seg_no = int(key[0])
         seg_id = seg_ids[seg_no]
         seg_dir = os.path.join(index_path, "segments", seg_id)
@@ -214,7 +240,8 @@ def make_packer(index_path: str, seg_ids: dict[int, str], opts: Bm25Options,
             st.setdefault("term_min", "")
             st.setdefault("term_max", "")
             return pd.DataFrame([st])[list(PACK_STATS_SCHEMA.names)]
-        stats = _pack_segment_pdf(pdf, seg_id, seg_dir, opts, doc_cols)
+        stats = _pack_segment_pdf(pdf, seg_id, seg_dir, opts, doc_cols,
+                                  rg_rows)
         return pd.DataFrame([stats])[list(PACK_STATS_SCHEMA.names)]
 
     return pack
@@ -244,6 +271,7 @@ def make_spill_packer(index_path: str, seg_ids: dict[int, str],
     returned by the winning attempt, and orphan dirs from losing attempts
     are unreachable (``vacuum`` reclaims them)."""
     doc_cols = doc_cols or []
+    rg_rows = POSTINGS_ROW_GROUP_ROWS
     budget = int(opts.spill_budget_bytes)
 
     per_post = 48 if opts.store_positions else 40
@@ -277,7 +305,7 @@ def make_spill_packer(index_path: str, seg_ids: dict[int, str],
             if os.path.exists(seg_dir):   # stale dir from a DEAD prior run
                 shutil.rmtree(seg_dir)    # (attempt-unique within this run)
             st = _pack_segment_pdf(pdf, seg_id, seg_dir, opts, doc_cols,
-                                   write_marker=False)
+                                   rg_rows, write_marker=False)
             subs.append(st)
             return pd.DataFrame([st])[list(PACK_STATS_SCHEMA.names)]
 

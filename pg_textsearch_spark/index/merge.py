@@ -50,7 +50,7 @@ def _merge_group_packer(opts: Bm25Options, seg_id: str, n_salts: int,
     with_pos = opts.store_positions
     codec = opts.codec
 
-    def pack_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack_group(key, pdf):
         term, salt = key[0], int(key[1])
         deleted = None
         if deleted_bc is not None:

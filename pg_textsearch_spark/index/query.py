@@ -48,6 +48,7 @@ per-segment alive bitset locality (src/segment/alive_bitset.c).
 from __future__ import annotations
 
 import math
+from collections import OrderedDict
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -113,18 +114,20 @@ def _read_postings(index: "Bm25Index", terms: list[str]) -> DataFrame:
     # cache the DataFrame (and with it Spark's resolved FileIndex) across
     # queries on the same segment set — re-listing N segment directories
     # per query dominates small-query latency otherwise. Keyed by the
-    # pruned path set; a handful of entries covers a hot query mix.
+    # pruned path set; a handful of entries (LRU) covers a hot query mix.
     key = tuple(sorted(paths))
     cache = getattr(index, "_postings_df_cache", None)
-    if cache is None or not isinstance(cache, dict):
-        cache = {}
+    if not isinstance(cache, OrderedDict):
+        cache = OrderedDict()
         index._postings_df_cache = cache
     df = cache.get(key)
     if df is None:
         df = index.spark.read.parquet(*paths)
         while len(cache) >= 8:          # bound resolved-FileIndex memory
-            cache.pop(next(iter(cache)))
+            cache.popitem(last=False)
         cache[key] = df
+    else:
+        cache.move_to_end(key)
     return df.filter(F.col("term").isin(terms))
 
 
@@ -544,7 +547,7 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
                      "blocks_total", "pos_blocks_decoded",
                      "pos_blocks_total"]
 
-    def kernel(key, pdf) -> "pd.DataFrame | tuple":
+    def kernel(key, pdf):
         seg_id = str(key[0])
         spec = {"doc_id": "int64", "raw_score": "float64", "n_terms": "int32",
                 "segment_id": "object", "blocks_decoded": "int64",
@@ -944,7 +947,7 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
     norm_len = DECODE_TABLE.astype(np.float64)
     denom_norm = k1 * (1.0 - b + b * norm_len / avgdl)
 
-    def kernel(key, pdf) -> "pd.DataFrame | tuple":
+    def kernel(key, pdf):
         seg_id = str(key[0])
         as_arrays = not isinstance(pdf, pd.DataFrame)   # serving fast path
         if as_arrays and profile:

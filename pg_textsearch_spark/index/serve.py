@@ -8,11 +8,22 @@ index artifacts, however, are plain Parquet plus an atomically-renamed
 JSON manifest, and the scoring kernels (``make_segment_kernel`` /
 ``make_batch_kernel``: MaxScore + block-max over lazily decoded blocks)
 are plain numpy. :class:`LocalSearcher` reads the SAME files with
-pyarrow — term-filtered and row-group-pruned: postings files are
-written (term, shard)-sorted, so parquet column statistics skip
-non-matching row groups — and runs the SAME kernels in-process.
-Results are pinned identical to ``search_index`` / ``search_batch`` in
-tests and oracle-checked by the driver (``bm25_topk_served``).
+pyarrow and runs the SAME kernels in-process. Results are pinned
+identical to ``search_index`` / ``search_batch`` in tests and
+oracle-checked by the driver (``bm25_topk_served``).
+
+Cold path. Postings files are written (term, shard)-sorted in row groups
+of at most ``build.POSTINGS_ROW_GROUP_ROWS`` rows with ``term`` statistics
+in the footer. Per manifest snapshot a replica opens each touched file
+once and keeps every row group's [term_min, term_max]. A cold term then
+(1) drops whole segments by the manifest's term range, (2) drops row
+groups whose footer range cannot hold it, (3) reads the rest with
+``read_row_groups`` and keeps the matching rows with ``pc.is_in``, and
+(4) turns them into row dicts straight from Arrow. ``resolve`` reads the
+docmap the same way: only ``doc_id`` plus the requested columns, only the
+row groups whose ``doc_id`` range holds a result id. Files with a single
+row group (older builds, Spark-written merge outputs) take the same path
+and read their one group.
 
 This is the reference's own split grafted onto Spark: pg_textsearch
 builds segments with parallel workers but answers ``ORDER BY <@>``
@@ -33,6 +44,7 @@ anything that composes with the rest of a pipeline.
 from __future__ import annotations
 
 import os
+from bisect import bisect_left
 from collections import OrderedDict
 
 import numpy as np
@@ -51,6 +63,61 @@ _EMPTY_BATCH = {"query_id": "int32", "doc_id": "int64", "score": "float64"}
 
 def _empty(spec: dict) -> pd.DataFrame:
     return pd.DataFrame({c: pd.Series(dtype=t) for c, t in spec.items()})
+
+
+def _open_parquet(d: str, stat_col: str) -> list[tuple]:
+    """``(ParquetFile, ranges)`` for every parquet file of directory ``d``;
+    ``ranges[i]`` is row group i's footer (min, max) of ``stat_col``, or
+    None when the footer carries no statistics for it (never pruned)."""
+    import pyarrow.parquet as pq
+    out = []
+    for f in sorted(os.listdir(d)):
+        if not f.endswith(".parquet"):
+            continue
+        pf = pq.ParquetFile(os.path.join(d, f))
+        md = pf.metadata
+        # leaf-column index: row-group statistics are per parquet leaf
+        col = [md.schema.column(i).path
+               for i in range(md.num_columns)].index(stat_col)
+        ranges = []
+        for i in range(md.num_row_groups):
+            st = md.row_group(i).column(col).statistics
+            ranges.append((st.min, st.max)
+                          if st is not None and st.has_min_max else None)
+        out.append((pf, ranges))
+    return out
+
+
+def _holds(vals, rng) -> bool:
+    """Whether sorted ``vals`` hold a value in the row-group range ``rng``
+    ((min, max), or None for a group without statistics)."""
+    if rng is None:
+        return True
+    j = bisect_left(vals, rng[0])
+    return j < len(vals) and vals[j] <= rng[1]
+
+
+def _row_dicts(tbl) -> list[dict]:
+    """Row dicts straight from an Arrow table. Scalars and binaries become
+    Python objects; list columns (the per-block skip arrays) become numpy
+    views of the column's flat values, the representation the kernels'
+    ``np.asarray`` calls take without a copy."""
+    import pyarrow as pa
+    cols = []
+    for col in tbl.columns:
+        if pa.types.is_list(col.type):
+            arr = col.combine_chunks()
+            vals = arr.values.to_numpy(zero_copy_only=False)
+            off = arr.offsets.to_numpy()
+            valid = (arr.is_valid().to_numpy(zero_copy_only=False)
+                     if arr.null_count else None)
+            cols.append([vals[off[i]:off[i + 1]]
+                         if valid is None or valid[i] else None
+                         for i in range(len(arr))])
+        else:
+            cols.append(col.to_pylist())
+    names = tbl.column_names
+    return [dict(zip(names, vs)) for vs in zip(*cols)]
 
 
 class LocalSearcher:
@@ -73,16 +140,12 @@ class LocalSearcher:
             os.path.join(self.path, MANIFEST_NAME))
         self._terms: OrderedDict[str, list[dict]] = OrderedDict()
         self._gdf: dict[str, int] = {}
-        # per-SNAPSHOT postings file-list cache: each segment directory is
-        # listed at most once per manifest version (the cold path used to
-        # re-list EVERY segment dir on every cold-term batch — 380 k
-        # listdir calls per cold query at the manifest's design point)
-        self._seg_files: dict[str, list[str]] = {}
-        # per-snapshot pyarrow dataset cache keyed by candidate file set:
-        # fragment/footer metadata parses once, later cold-term batches on
-        # the same segment set reuse it (the serving analogue of the Spark
-        # path's resolved-FileIndex cache)
-        self._ds_cache: dict[tuple, object] = {}
+        # per-SNAPSHOT open files, keyed by segment_id: each segment's
+        # postings / docmap directory is listed and its footers parsed at
+        # most once per manifest version; the cached row-group ranges
+        # (term for postings, doc_id for docmaps) drive row-group pruning
+        self._seg_files: dict[str, list[tuple]] = {}
+        self._doc_files: dict[str, list[tuple]] = {}
         # decoded-posting readers persist ACROSS queries (keyed
         # (segment_id, term)); lifetime is tied to the term LRU and the
         # tombstone snapshot — readers mask deletions at decode time, so
@@ -118,53 +181,52 @@ class LocalSearcher:
             self._readers.clear()   # cached decodes masked old tombstones
         return self._tomb
 
-    def _files_for(self, segment_id: str) -> list[str]:
-        """Postings parquet files of one segment, listed once per manifest
-        snapshot (the cache dies with :meth:`_load`)."""
-        files = self._seg_files.get(segment_id)
+    def _files_for(self, segment_id: str, docs: bool = False) -> list[tuple]:
+        """``(ParquetFile, row-group ranges)`` of one segment's postings
+        (``docs=False``, ranges on ``term``) or docmap (``docs=True``,
+        ranges on ``doc_id``), opened once per manifest snapshot (the
+        cache dies with :meth:`_load`)."""
+        cache = self._doc_files if docs else self._seg_files
+        files = cache.get(segment_id)
         if files is None:
             d = os.path.join(self.manifest.segment_dir(segment_id),
-                             POSTINGS_DIR)
-            files = [os.path.join(d, f) for f in sorted(os.listdir(d))
-                     if f.endswith(".parquet")]
-            self._seg_files[segment_id] = files
+                             DOCS_DIR if docs else POSTINGS_DIR)
+            files = _open_parquet(d, "doc_id" if docs else "term")
+            cache[segment_id] = files
         return files
 
     def _fetch(self, terms: list[str]) -> dict[str, list[dict]]:
         """Posting rows for ``terms`` from the LRU cache, reading the
-        missing ones in ONE filtered dataset scan over ONLY the segments
-        whose manifest term range [term_min, term_max] can contain a
-        missing term (whole segment directories drop before any listing;
-        within scanned files, row groups prune via parquet statistics —
-        the driver-local analogue of the Spark path's ``term IN``
-        PushedFilters)."""
+        missing ones from ONLY the segments whose manifest term range
+        [term_min, term_max] can contain a missing term, and within those
+        from ONLY the row groups whose footer term range can (the
+        driver-local analogue of the Spark path's ``term IN``
+        PushedFilters). Each term's rows come back (segment_id, shard)-
+        sorted."""
         missing = sorted({t for t in terms if t not in self._terms})
         if missing:
-            import pyarrow.dataset as pds
-            files = []
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            got: dict[str, list[dict]] = {}
+            value_set = pa.array(missing, type=pa.string())
             for s in self.manifest.segments:
                 tmin = getattr(s, "term_min", "")
                 tmax = getattr(s, "term_max", "")
-                if (tmin and tmax
-                        and not any(tmin <= t <= tmax for t in missing)):
+                if tmin and tmax and not _holds(missing, (tmin, tmax)):
                     continue        # segment cannot contain any cold term
-                files.extend(self._files_for(s.segment_id))
-            got: dict[str, list[dict]] = {}
-            if files:
-                dkey = tuple(files)
-                ds = self._ds_cache.get(dkey)
-                if ds is None:
-                    ds = pds.dataset(files)
-                    while len(self._ds_cache) >= 8:
-                        self._ds_cache.pop(next(iter(self._ds_cache)))
-                    self._ds_cache[dkey] = ds
-                tbl = ds.to_table(filter=pds.field("term").isin(missing))
-                for rec in (tbl.to_pandas()
-                            .sort_values(["segment_id", "term", "shard"])
-                            .to_dict("records")):
-                    got.setdefault(rec["term"], []).append(rec)
+                for pf, ranges in self._files_for(s.segment_id):
+                    rgs = [i for i, r in enumerate(ranges)
+                           if _holds(missing, r)]
+                    if not rgs:
+                        continue
+                    tbl = pf.read_row_groups(rgs, use_threads=False)
+                    tbl = tbl.filter(pc.is_in(tbl["term"],
+                                              value_set=value_set))
+                    for rec in _row_dicts(tbl):
+                        got.setdefault(rec["term"], []).append(rec)
             for t in missing:
-                rows = got.get(t, [])
+                rows = sorted(got.get(t, ()),
+                              key=lambda r: (r["segment_id"], r["shard"]))
                 self._terms[t] = rows
                 self._gdf[t] = int(sum(r["doc_freq"] for r in rows))
         out, gdf = {}, {}
@@ -199,29 +261,45 @@ class LocalSearcher:
         a result frame keyed by internal doc_id — the serving analogue of
         ``Bm25Index.resolve``. Reads ONLY the docmaps of segments whose
         doc-id range intersects the results (top-k ids usually hit one or
-        two segments), then re-applies the public ordering contract
-        (score DESC, source_id ASC) like the Spark path."""
-        import pyarrow.dataset as pds
+        two segments), and in them only ``doc_id`` plus the requested
+        columns of the row groups whose doc_id range holds a result id;
+        then re-applies the public ordering contract (score DESC,
+        source_id ASC) like the Spark path."""
+        import pyarrow as pa
         out = results.reset_index(drop=True)
         if not len(out):
             return out
-        ids = out["doc_id"].tolist()
-        lo, hi = min(ids), max(ids)
-        dirs = [os.path.join(self.manifest.segment_dir(s.segment_id),
-                             DOCS_DIR)
-                for s in self.manifest.segments
-                if not (s.max_doc_id < lo or s.min_doc_id > hi)]
-        files = [os.path.join(d, f) for d in dirs
-                 for f in sorted(os.listdir(d)) if f.endswith(".parquet")]
-        data = pds.dataset(files)
-        avail = set(data.schema.names)
+        ids = out["doc_id"].to_numpy(dtype=np.int64)
+        uniq = np.unique(ids)
+        lo, hi = int(uniq[0]), int(uniq[-1])
+        files = [f for s in self.manifest.segments
+                 if not (s.max_doc_id < lo or s.min_doc_id > hi)
+                 for f in self._files_for(s.segment_id, docs=True)]
+        avail = set(files[0][0].schema_arrow.names) if files else set()
         want = [c for c in cols if c in avail and c != "doc_id"]
         if "source_id" in cols and "source_id" not in avail:
             out["source_id"] = out["doc_id"]   # identity-layout build
         if want:
-            tbl = data.to_table(columns=["doc_id"] + want,
-                                filter=pds.field("doc_id").isin(ids))
-            out = out.merge(tbl.to_pandas(), on="doc_id", how="left")
+            parts = [pf.read_row_groups(rgs, columns=["doc_id"] + want,
+                                        use_threads=False)
+                     for pf, ranges in files
+                     if (rgs := [i for i, r in enumerate(ranges)
+                                 if _holds(uniq, r)])]
+            tbl = (pa.concat_tables(parts, promote_options="default")
+                   if parts else files[0][0].schema_arrow.empty_table()
+                   .select(["doc_id"] + want))
+            # map each result id to its docmap row: sorted-id search, no
+            # pandas merge; ids absent from the docmap get nulls
+            dm = tbl["doc_id"].to_numpy()
+            order = np.argsort(dm, kind="stable")
+            pos = np.searchsorted(dm[order], ids)
+            found = pos < dm.size
+            found[found] = dm[order[pos[found]]] == ids[found]
+            idx = np.zeros(ids.size, np.int64)
+            idx[found] = order[pos[found]]
+            take = pa.array(idx, mask=None if found.all() else ~found)
+            for c in want:
+                out[c] = tbl[c].take(take).to_pandas()
         if "score" in out.columns and "source_id" in out.columns:
             pre = ["query_id"] if "query_id" in out.columns else []
             out = out.sort_values(

@@ -150,7 +150,7 @@ def phrase_match_ids(
 
     occs_b = occs
 
-    def check(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def check(key, pdf):
         posmap = {t: np.asarray(p) for t, p in zip(pdf["term"], pdf["positions"])}
         first_t, first_off = occs_b[0]
         starts = posmap.get(first_t)

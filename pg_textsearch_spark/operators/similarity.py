@@ -602,7 +602,9 @@ class IvfIndex:
         queries = (qdf.select(
             F.col(query_id_col).cast("long").alias("query_id"),
             F.col(vec_col).cast("array<double>").alias("qv"))
-            .withColumn("qn", _norm_col(F.col("qv"))))
+            # zero-vector queries clamp like _with_norm / LocalAnnSearcher
+            .withColumn("qn", F.greatest(_norm_col(F.col("qv")),
+                                         F.lit(1e-30))))
         return self._probe_queries(queries, k, nprobe, exclude_ids=None)
 
     def serving(self, cache_buckets: int = 64) -> "LocalAnnSearcher":

@@ -28,6 +28,16 @@ _EXT_FORMATS = {".parquet": "parquet", ".orc": "orc", ".json": "json",
                 ".jsonl": "json", ".csv": "csv"}
 
 
+def _data_files(d: str) -> list[str]:
+    """Entries of directory ``d`` with a known data-file extension, Spark
+    ``part-`` files first (then by name); hidden and ``_`` entries
+    (``_SUCCESS``, ``.crc``) are skipped."""
+    data = [f for f in os.listdir(d)
+            if not f.startswith(("_", "."))
+            and os.path.splitext(f)[1].lower() in _EXT_FORMATS]
+    return sorted(data, key=lambda f: (not f.startswith("part-"), f))
+
+
 def load_source_table(spark: SparkSession, ref: str,
                       predicate: str | None = None,
                       columns: list[str] | None = None,
@@ -35,8 +45,9 @@ def load_source_table(spark: SparkSession, ref: str,
     """Load the source-code table from an Iceberg table name or a path.
 
     ``fmt`` pins the file format ('parquet'/'orc'/'json'/'csv'); when
-    None it is sniffed from the path extension (or the extension of the
-    first data file inside a directory), defaulting to parquet. CSV
+    None it is sniffed from the path extension (or, for a directory, from
+    its first data file, see :func:`_data_files`, and only files with that
+    extension are read), defaulting to parquet. CSV
     reads with header+schema inference — fine for ad-hoc corpora, pin a
     schema upstream for production ingest (columnar formats keep
     predicate pushdown and column pruning; json/csv are row formats and
@@ -52,16 +63,19 @@ def load_source_table(spark: SparkSession, ref: str,
             except Exception:
                 df = None
     if df is None:
+        reader = spark.read
         if fmt is None:
             probe = ref
             if os.path.isdir(ref):
-                data = [f for f in sorted(os.listdir(ref))
-                        if not f.startswith(("_", "."))]
+                data = _data_files(ref)
                 if data:
                     probe = data[0]
+                    # read only files of the sniffed format: a stray
+                    # metadata.json would fail a parquet scan
+                    reader = reader.option(
+                        "pathGlobFilter", "*" + os.path.splitext(probe)[1])
             fmt = _EXT_FORMATS.get(os.path.splitext(probe)[1].lower(),
                                    "parquet")
-        reader = spark.read
         if fmt == "csv":
             reader = reader.option("header", "true") \
                            .option("inferSchema", "true")

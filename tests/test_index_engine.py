@@ -223,3 +223,28 @@ def test_search_batch_matches_single(spark, corpus, tmp_index):
     for i, q in enumerate(qs):
         want = rows(idx.search(q, k=7))
         assert by_q.get(i, []) == want, q
+
+
+def test_no_eval_type_inference_warning(spark, corpus, tmp_index):
+    """Grouped-map functions (build packer, merge packer, query kernels)
+    carry no partial type hints, so PySpark never warns that it cannot
+    infer their eval type."""
+    import warnings
+    from pg_textsearch_spark.index.query import search_batch
+    opts = Bm25Options(text_config="english", store_positions=True)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        idx = Bm25Index.build(spark, corpus, "content", tmp_index,
+                              id_col="id", opts=opts, num_segments=2)
+        want = rows(idx.search("alpha gamma", k=5))
+        rows(idx.search("beta gamma", k=5, mode="phrase"))
+        search_batch(idx, ["alpha", "gamma delta"], k=3).collect()
+        idx.force_merge()
+        got = rows(idx.search("alpha gamma", k=5))
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
+    assert got == want
+    # the merged segment's Spark-written postings serve like the Spark path
+    srv = idx.serving()
+    assert list(zip(*[srv.search("alpha gamma", k=5)[c].tolist()
+                      for c in ("doc_id", "score")])) == want

@@ -228,3 +228,49 @@ def test_load_source_table_formats(spark, tmp_path):
         assert got.columns == ["repo", "path", "content"], fmt
         assert got.count() == 10, fmt
         assert got.filter(got.content.contains("def f")).count() == 10, fmt
+
+
+def test_load_source_table_skips_stray_files(spark, tmp_path):
+    """A parquet directory that also holds a stray metadata.json is still
+    sniffed as parquet, and the stray file is not read."""
+    from pg_textsearch_spark.sources.loader import load_source_table
+    rows = [(f"r{i % 3}", f"src/f{i}.py", f"c{i}", "py", f"x = {i}")
+            for i in range(12)]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, "
+              "content string")
+    p = str(tmp_path / "src")
+    df.coalesce(1).write.parquet(p)
+    with open(os.path.join(p, "metadata.json"), "w") as f:
+        f.write('{"note": "not data"}\n')
+    got = load_source_table(spark, p, predicate="repo = 'r1'")
+    assert got.count() == 4
+    assert sorted(got.columns) == sorted(df.columns)
+
+
+def test_postings_df_cache_is_lru(spark):
+    """The Spark path's per-index DataFrame cache evicts the least recently
+    USED segment set: a hit refreshes an entry, so a hot set survives a
+    stream of one-off sets."""
+    from types import SimpleNamespace
+    from pg_textsearch_spark.index import query
+
+    reads = []
+
+    class Reader:
+        def parquet(self, *paths):
+            reads.append(paths)
+            return SimpleNamespace(filter=lambda cond: None)
+
+    segs = [SimpleNamespace(segment_id=f"s{i}", term_min=f"t{i}",
+                            term_max=f"t{i}") for i in range(10)]
+    index = SimpleNamespace(
+        spark=SimpleNamespace(read=Reader()),
+        manifest=SimpleNamespace(segments=segs,
+                                 segment_dir=lambda sid: f"/x/{sid}"))
+    query._read_postings(index, ["t0"])            # the hot set
+    for i in range(1, 10):
+        query._read_postings(index, [f"t{i}"])     # one-off sets
+        query._read_postings(index, ["t0"])        # hit: stays recent
+    assert sum(1 for p in reads if p == ("/x/s0/postings",)) == 1
+    assert len(index._postings_df_cache) == 8

@@ -2,6 +2,8 @@
 result-identical to the Spark query path on the same artifacts — or/and/
 phrase modes, deletions, LSM appends (refresh), batches, LRU bounds."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -230,3 +232,151 @@ def test_partitioned_serving_matches_spark(spark, tmp_path):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         srv.search("alpha", partitions=["nope"])
+
+
+# -- row-group-pruned cold path ------------------------------------------------
+
+@pytest.fixture
+def small_row_groups(monkeypatch):
+    """Postings row groups of 5 rows: the packer factories read the
+    constant on the driver, so a tiny corpus spans many groups."""
+    from pg_textsearch_spark.index import build
+    monkeypatch.setattr(build, "POSTINGS_ROW_GROUP_ROWS", 5)
+
+
+RG_OPTS = Bm25Options(text_config="english", store_positions=True,
+                      reorder_docs="length")
+
+
+def _postings_files(index):
+    out = []
+    for d in index.postings_paths():
+        out += [os.path.join(d, f) for f in sorted(os.listdir(d))
+                if f.endswith(".parquet")]
+    return out
+
+
+def _assert_serving_parity(idx, srv):
+    for q in QUERIES:
+        assert serve_rows(srv.search(q, k=10)) == \
+            spark_rows(idx.search(q, k=10)), q
+    for q in ["quick brown fox", "lazy dog"]:
+        for mode in ("and", "phrase"):
+            assert serve_rows(srv.search(q, k=10, mode=mode)) == \
+                spark_rows(idx.search(q, k=10, mode=mode)), (q, mode)
+    qs = ["quick brown", "lazy dog river", "stone", "nosuchterm", "fox ember"]
+    got = srv.search_batch(qs, k=5)
+    want = search_batch(idx, qs, k=5).toPandas()
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
+    got = srv.resolve(srv.search("quick brown fox", k=10),
+                      cols=("source_id", "doc_len"))
+    want = idx.resolve(idx.search("quick brown fox", k=10)).toPandas()
+    assert list(zip(got["source_id"], got["score"])) == \
+        list(zip(want["source_id"], want["score"]))
+    dm = idx.docmap().select("doc_id", "doc_len").toPandas()
+    doc_len = dict(zip(dm["doc_id"], dm["doc_len"]))
+    assert got["doc_len"].tolist() == [doc_len[d] for d in got["doc_id"]]
+
+
+def test_serve_parity_on_many_row_groups(spark, corpus, tmp_path,
+                                         small_row_groups):
+    import pyarrow.parquet as pq
+    # identity layout: appends need it
+    idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=OPTS, num_segments=3)
+    for f in _postings_files(idx):
+        assert pq.ParquetFile(f).metadata.num_row_groups > 5, f
+    srv = idx.serving()
+    _assert_serving_parity(idx, srv)
+
+    victims = srv.search("quick brown", k=5)["doc_id"].tolist()[:2]
+    idx.delete(victims)
+    assert not set(victims) & set(
+        srv.search("quick brown", k=10)["doc_id"].tolist())
+    _assert_serving_parity(idx, srv)
+
+    extra = spark.createDataFrame(
+        [(1000 + i, "quick brown fox quick brown fox river") for i in range(5)],
+        "id long, content string")
+    idx.append(extra, "content", "id")
+    _assert_serving_parity(idx, srv)
+
+
+def test_cold_fetch_reads_only_row_groups_holding_the_term(
+        spark, corpus, tmp_path, small_row_groups, monkeypatch):
+    import pyarrow.parquet as pq
+    from pg_textsearch_spark.functions.tokenizer import tokenize_query
+    idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=RG_OPTS, num_segments=1)
+    (path,) = _postings_files(idx)
+    md = pq.ParquetFile(path).metadata
+    col = md.schema.to_arrow_schema().get_field_index("term")
+    (term, _), = tokenize_query("river", RG_OPTS.text_config)
+    holding = [i for i in range(md.num_row_groups)
+               if md.row_group(i).column(col).statistics.min <= term
+               <= md.row_group(i).column(col).statistics.max]
+    assert 1 <= len(holding) < md.num_row_groups
+
+    reads = []
+    orig = pq.ParquetFile.read_row_groups
+
+    def spy(self, row_groups, *a, **kw):
+        reads.append(list(row_groups))
+        return orig(self, row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    srv = LocalSearcher(idx.path)
+    rows, gdf = srv._fetch([term])
+    assert reads == [holding]
+    assert rows[term] and all(r["term"] == term for r in rows[term])
+    assert gdf[term] == sum(r["doc_freq"] for r in rows[term])
+    srv._fetch([term])                  # warm: the LRU answers
+    assert reads == [holding]
+
+
+def test_single_row_group_postings_serve_identically(spark, corpus, tmp_path,
+                                                     small_row_groups):
+    """Older builds and Spark-written merge outputs hold one row group per
+    postings file; the same reader serves them."""
+    import pyarrow.parquet as pq
+    idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=RG_OPTS, num_segments=2)
+    many = idx.serving()
+    qs = QUERIES + ["quick brown fox river"]
+    before = [serve_rows(many.search(q, k=10)) for q in qs]
+    phrase = serve_rows(many.search("lazy dog", k=10, mode="phrase"))
+    batch = many.search_batch(qs, k=5)
+    resolved = many.resolve(many.search("quick brown fox", k=10))
+    assert before == [spark_rows(idx.search(q, k=10)) for q in qs]
+    for f in _postings_files(idx):
+        pq.write_table(pq.read_table(f), f)
+        assert pq.ParquetFile(f).metadata.num_row_groups == 1
+    one = LocalSearcher(idx.path)
+    assert [serve_rows(one.search(q, k=10)) for q in qs] == before
+    assert serve_rows(one.search("lazy dog", k=10, mode="phrase")) == phrase
+    assert one.search_batch(qs, k=5).equals(batch)
+    assert one.resolve(one.search("quick brown fox", k=10)).equals(resolved)
+
+
+def test_ann_search_vectors_zero_query(spark, tmp_path):
+    """An all-zero query vector clamps its norm like the build side: no
+    error, every cosine 0, ties by vec_id — the driver-local twin's
+    ranking."""
+    import numpy as np
+    from pg_textsearch_spark.operators.similarity import IvfIndex
+    rows = [(i, [float((i + j) % 5 + 1) for j in range(4)])
+            for i in range(40)]
+    embs = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    ivf = IvfIndex.build(spark, embs, str(tmp_path / "z"),
+                         n_centroids=4, n_iters=2)
+    qdf = spark.createDataFrame([(0, [0.0] * 4), (1, [1.0, 2.0, 3.0, 4.0])],
+                                "query_id long, qv array<double>")
+    a = ivf.search_vectors(qdf, k=5, nprobe=2).toPandas()
+    b = ivf.search_vectors(qdf, k=5, nprobe=2).toPandas()
+    assert a.equals(b)
+    zero = a[a["query_id"] == 0]
+    assert len(zero) == 5 and (zero["cos"] == 0.0).all()
+    assert zero["vec_id"].tolist() == sorted(zero["vec_id"].tolist())
+    twin = ivf.serving().search_vector(np.zeros(4), k=5, nprobe=2)
+    assert twin["vec_id"].tolist() == zero["vec_id"].tolist()
+    assert len(a[a["query_id"] == 1]) == 5
