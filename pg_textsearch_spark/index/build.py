@@ -73,7 +73,9 @@ DOCS_DIR = "docs"
 # encoding on `segment_id` alone (one value per file; every other column is
 # near-unique per row). Smaller groups cost footer bytes and compression
 # context: at 2 048 rows the zstd level below is what keeps a 7-segment,
-# ~9.7 k-row-per-segment index no larger than the one-group layout.
+# ~9.7 k-row-per-segment index no larger than the one-group layout. Merges
+# write the same (term, shard) order and row-group bound with Spark's writer
+# (merge.py), keeping Spark's default codec and statistics.
 POSTINGS_ROW_GROUP_ROWS = 2048
 POSTINGS_ZSTD_LEVEL = 9
 
@@ -100,15 +102,12 @@ def _postings_arrow_schema(with_positions: bool):
 
 
 def write_segment_files(seg_dir: str, packed: pd.DataFrame,
-                        docs: pd.DataFrame, with_positions: bool,
-                        row_group_rows: int) -> int:
+                        docs: pd.DataFrame, with_positions: bool) -> int:
     """Write postings + per-segment docmap parquet dirs, return bytes.
 
     Files land under temp names first; the marker is written last by the
     caller (finalize-then-mark). Postings/docs are parquet *directories* so
-    merge jobs can write them with Spark's native writer too.
-    ``row_group_rows`` is POSTINGS_ROW_GROUP_ROWS as read on the driver
-    that planned the job (the packer factories capture it)."""
+    merge jobs can write them with Spark's native writer too."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -122,7 +121,7 @@ def write_segment_files(seg_dir: str, packed: pd.DataFrame,
     ppath = os.path.join(pdir, "part-0.parquet")
     pq.write_table(table, ppath + ".tmp", compression="zstd",
                    compression_level=POSTINGS_ZSTD_LEVEL,
-                   row_group_size=row_group_rows,
+                   row_group_size=POSTINGS_ROW_GROUP_ROWS,
                    use_dictionary=["segment_id"], write_statistics=["term"],
                    sorting_columns=[pq.SortingColumn(1)])
     os.replace(ppath + ".tmp", ppath)
@@ -140,7 +139,7 @@ def write_segment_files(seg_dir: str, packed: pd.DataFrame,
 
 def _pack_segment_pdf(pdf: pd.DataFrame, seg_id: str, seg_dir: str,
                       opts: Bm25Options, doc_cols: list[str],
-                      row_group_rows: int, write_marker: bool = True) -> dict:
+                      write_marker: bool = True) -> dict:
     """Flatten one array-packed doc group into a written segment (B5-B10);
     returns the stats dict. ``write_marker=False`` for callers whose resume
     unit is coarser than one written segment (the spill packer's bucket)."""
@@ -183,8 +182,7 @@ def _pack_segment_pdf(pdf: pd.DataFrame, seg_id: str, seg_dir: str,
                                  with_positions=with_positions,
                                  codec=opts.codec)
     packed.insert(0, "segment_id", seg_id)
-    nbytes = write_segment_files(seg_dir, packed, docs, with_positions,
-                                 row_group_rows)
+    nbytes = write_segment_files(seg_dir, packed, docs, with_positions)
 
     dfreqs = packed.groupby("term")["doc_freq"].sum() if len(packed) else pd.Series(dtype=np.int64)
     max_df = int(dfreqs.max()) if len(dfreqs) else 0
@@ -225,7 +223,6 @@ def make_packer(index_path: str, seg_ids: dict[int, str], opts: Bm25Options,
     carried through the tokenizer pass and written into the per-segment
     docmap — the docmap needs NO second scan of the source."""
     doc_cols = doc_cols or []
-    rg_rows = POSTINGS_ROW_GROUP_ROWS
 
     def pack(key, pdf):
         seg_no = int(key[0])
@@ -240,8 +237,7 @@ def make_packer(index_path: str, seg_ids: dict[int, str], opts: Bm25Options,
             st.setdefault("term_min", "")
             st.setdefault("term_max", "")
             return pd.DataFrame([st])[list(PACK_STATS_SCHEMA.names)]
-        stats = _pack_segment_pdf(pdf, seg_id, seg_dir, opts, doc_cols,
-                                  rg_rows)
+        stats = _pack_segment_pdf(pdf, seg_id, seg_dir, opts, doc_cols)
         return pd.DataFrame([stats])[list(PACK_STATS_SCHEMA.names)]
 
     return pack
@@ -271,7 +267,6 @@ def make_spill_packer(index_path: str, seg_ids: dict[int, str],
     returned by the winning attempt, and orphan dirs from losing attempts
     are unreachable (``vacuum`` reclaims them)."""
     doc_cols = doc_cols or []
-    rg_rows = POSTINGS_ROW_GROUP_ROWS
     budget = int(opts.spill_budget_bytes)
 
     per_post = 48 if opts.store_positions else 40
@@ -305,7 +300,7 @@ def make_spill_packer(index_path: str, seg_ids: dict[int, str],
             if os.path.exists(seg_dir):   # stale dir from a DEAD prior run
                 shutil.rmtree(seg_dir)    # (attempt-unique within this run)
             st = _pack_segment_pdf(pdf, seg_id, seg_dir, opts, doc_cols,
-                                   rg_rows, write_marker=False)
+                                   write_marker=False)
             subs.append(st)
             return pd.DataFrame([st])[list(PACK_STATS_SCHEMA.names)]
 

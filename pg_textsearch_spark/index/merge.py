@@ -150,7 +150,7 @@ def merge_segments(index, seg_records: list[SegmentRecord], out_level: int,
 
     pack_group = _merge_group_packer(opts, seg_id, n_salts, deleted_bc)
 
-    from .build import PACK_STATS_SCHEMA, _postings_arrow_schema  # schema reuse
+    from .build import POSTINGS_ROW_GROUP_ROWS
     spark_schema = ("segment_id string, term string, shard long, "
                     "min_doc_id long, last_doc_id long, doc_freq int, "
                     "num_blocks int, doc_ids_bin binary, tfs_bin binary, "
@@ -161,7 +161,13 @@ def merge_segments(index, seg_records: list[SegmentRecord], out_level: int,
                     "pos_deltas_bin binary, skip_pos_off array<long>")
     packed = (salted.groupBy("term", "salt")
               .applyInPandas(pack_group, spark_schema))
-    packed.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
+    # same layout as a built segment: each part file (term, shard)-sorted
+    # in row groups of at most POSTINGS_ROW_GROUP_ROWS rows, so serving's
+    # footer-range pruning applies to merged segments too (a hash-shuffled
+    # part file otherwise spans the whole vocabulary in one row group)
+    (packed.sortWithinPartitions("term", "shard").write.mode("overwrite")
+     .option("parquet.block.row.count.limit", POSTINGS_ROW_GROUP_ROWS)
+     .parquet(os.path.join(seg_dir, "postings")))
 
     docs = spark.read.parquet(*in_docs)
     if deleted is not None:

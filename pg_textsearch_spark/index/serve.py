@@ -65,17 +65,18 @@ def _empty(spec: dict) -> pd.DataFrame:
     return pd.DataFrame({c: pd.Series(dtype=t) for c, t in spec.items()})
 
 
-def _open_parquet(d: str, stat_col: str) -> list[tuple]:
-    """``(ParquetFile, ranges)`` for every parquet file of directory ``d``;
-    ``ranges[i]`` is row group i's footer (min, max) of ``stat_col``, or
-    None when the footer carries no statistics for it (never pruned)."""
+def _read_footers(d: str, stat_col: str) -> list[tuple]:
+    """``(path, footer, arrow schema, ranges)`` for every parquet file of
+    directory ``d``; ``ranges[i]`` is row group i's footer (min, max) of
+    ``stat_col``, or None when the footer carries no statistics for it
+    (never pruned). Only the parsed footer is kept: no file stays open."""
     import pyarrow.parquet as pq
     out = []
     for f in sorted(os.listdir(d)):
         if not f.endswith(".parquet"):
             continue
-        pf = pq.ParquetFile(os.path.join(d, f))
-        md = pf.metadata
+        path = os.path.join(d, f)
+        md = pq.read_metadata(path)
         # leaf-column index: row-group statistics are per parquet leaf
         col = [md.schema.column(i).path
                for i in range(md.num_columns)].index(stat_col)
@@ -84,8 +85,17 @@ def _open_parquet(d: str, stat_col: str) -> list[tuple]:
             st = md.row_group(i).column(col).statistics
             ranges.append((st.min, st.max)
                           if st is not None and st.has_min_max else None)
-        out.append((pf, ranges))
+        out.append((path, md, md.schema.to_arrow_schema(), ranges))
     return out
+
+
+def _read_groups(path: str, md, rgs: list[int], columns=None):
+    """Row groups ``rgs`` of one file whose footer ``md`` is already
+    parsed. The file is open for this read only, so a replica holds no
+    descriptor between queries however many files it has touched."""
+    import pyarrow.parquet as pq
+    with pq.ParquetFile(path, metadata=md) as pf:
+        return pf.read_row_groups(rgs, columns=columns, use_threads=False)
 
 
 def _holds(vals, rng) -> bool:
@@ -140,7 +150,7 @@ class LocalSearcher:
             os.path.join(self.path, MANIFEST_NAME))
         self._terms: OrderedDict[str, list[dict]] = OrderedDict()
         self._gdf: dict[str, int] = {}
-        # per-SNAPSHOT open files, keyed by segment_id: each segment's
+        # per-SNAPSHOT file footers, keyed by segment_id: each segment's
         # postings / docmap directory is listed and its footers parsed at
         # most once per manifest version; the cached row-group ranges
         # (term for postings, doc_id for docmaps) drive row-group pruning
@@ -182,16 +192,16 @@ class LocalSearcher:
         return self._tomb
 
     def _files_for(self, segment_id: str, docs: bool = False) -> list[tuple]:
-        """``(ParquetFile, row-group ranges)`` of one segment's postings
+        """:func:`_read_footers` entries of one segment's postings
         (``docs=False``, ranges on ``term``) or docmap (``docs=True``,
-        ranges on ``doc_id``), opened once per manifest snapshot (the
+        ranges on ``doc_id``), listed once per manifest snapshot (the
         cache dies with :meth:`_load`)."""
         cache = self._doc_files if docs else self._seg_files
         files = cache.get(segment_id)
         if files is None:
             d = os.path.join(self.manifest.segment_dir(segment_id),
                              DOCS_DIR if docs else POSTINGS_DIR)
-            files = _open_parquet(d, "doc_id" if docs else "term")
+            files = _read_footers(d, "doc_id" if docs else "term")
             cache[segment_id] = files
         return files
 
@@ -214,12 +224,12 @@ class LocalSearcher:
                 tmax = getattr(s, "term_max", "")
                 if tmin and tmax and not _holds(missing, (tmin, tmax)):
                     continue        # segment cannot contain any cold term
-                for pf, ranges in self._files_for(s.segment_id):
+                for path, md, _, ranges in self._files_for(s.segment_id):
                     rgs = [i for i, r in enumerate(ranges)
                            if _holds(missing, r)]
                     if not rgs:
                         continue
-                    tbl = pf.read_row_groups(rgs, use_threads=False)
+                    tbl = _read_groups(path, md, rgs)
                     tbl = tbl.filter(pc.is_in(tbl["term"],
                                               value_set=value_set))
                     for rec in _row_dicts(tbl):
@@ -262,8 +272,9 @@ class LocalSearcher:
         ``Bm25Index.resolve``. Reads ONLY the docmaps of segments whose
         doc-id range intersects the results (top-k ids usually hit one or
         two segments), and in them only ``doc_id`` plus the requested
-        columns of the row groups whose doc_id range holds a result id;
-        then re-applies the public ordering contract (score DESC,
+        columns of the row groups whose doc_id range holds a result id (a
+        column is available when any touched docmap holds it, null for
+        rows of docmaps that lack it); then re-applies the public ordering contract (score DESC,
         source_id ASC) like the Spark path."""
         import pyarrow as pa
         out = results.reset_index(drop=True)
@@ -275,19 +286,31 @@ class LocalSearcher:
         files = [f for s in self.manifest.segments
                  if not (s.max_doc_id < lo or s.min_doc_id > hi)
                  for f in self._files_for(s.segment_id, docs=True)]
-        avail = set(files[0][0].schema_arrow.names) if files else set()
-        want = [c for c in cols if c in avail and c != "doc_id"]
-        if "source_id" in cols and "source_id" not in avail:
+        # docmap columns follow the frame each segment was written from
+        # (an append batch may lack a build's metadata column): a column
+        # any touched docmap holds is available, null where a file lacks it
+        schema = (pa.unify_schemas([sch for _, _, sch, _ in files])
+                  if files else pa.schema([]))
+        want = [c for c in cols if c in schema.names and c != "doc_id"]
+        if "source_id" in cols and "source_id" not in schema.names:
             out["source_id"] = out["doc_id"]   # identity-layout build
         if want:
-            parts = [pf.read_row_groups(rgs, columns=["doc_id"] + want,
-                                        use_threads=False)
-                     for pf, ranges in files
-                     if (rgs := [i for i, r in enumerate(ranges)
-                                 if _holds(uniq, r)])]
+            sel = ["doc_id"] + want
+            parts = []
+            for path, md, sch, ranges in files:
+                rgs = [i for i, r in enumerate(ranges) if _holds(uniq, r)]
+                if not rgs:
+                    continue
+                part = _read_groups(path, md, rgs,
+                                    [c for c in sel if c in sch.names])
+                for c in sel:
+                    if c not in part.column_names:
+                        f = schema.field(c)
+                        part = part.append_column(
+                            f, pa.nulls(part.num_rows, f.type))
+                parts.append(part.select(sel))
             tbl = (pa.concat_tables(parts, promote_options="default")
-                   if parts else files[0][0].schema_arrow.empty_table()
-                   .select(["doc_id"] + want))
+                   if parts else schema.empty_table().select(sel))
             # map each result id to its docmap row: sorted-id search, no
             # pandas merge; ids absent from the docmap get nulls
             dm = tbl["doc_id"].to_numpy()

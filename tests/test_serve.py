@@ -236,14 +236,6 @@ def test_partitioned_serving_matches_spark(spark, tmp_path):
 
 # -- row-group-pruned cold path ------------------------------------------------
 
-@pytest.fixture
-def small_row_groups(monkeypatch):
-    """Postings row groups of 5 rows: the packer factories read the
-    constant on the driver, so a tiny corpus spans many groups."""
-    from pg_textsearch_spark.index import build
-    monkeypatch.setattr(build, "POSTINGS_ROW_GROUP_ROWS", 5)
-
-
 RG_OPTS = Bm25Options(text_config="english", store_positions=True,
                       reorder_docs="length")
 
@@ -254,6 +246,26 @@ def _postings_files(index):
         out += [os.path.join(d, f) for f in sorted(os.listdir(d))
                 if f.endswith(".parquet")]
     return out
+
+
+def _regroup_postings(index, rows):
+    """Rewrite every postings file in row groups of ``rows`` rows with
+    statistics on ``term`` only, so a tiny corpus spans many groups. Run
+    it before the first Spark search: Spark caches file listings."""
+    import pyarrow.parquet as pq
+    for f in _postings_files(index):
+        pq.write_table(pq.read_table(f), f, row_group_size=rows,
+                       write_statistics=["term"])
+
+
+def _term_ranges(path):
+    """Footer (min, max) of ``term`` per row group of one postings file."""
+    import pyarrow.parquet as pq
+    md = pq.ParquetFile(path).metadata
+    col = md.schema.to_arrow_schema().get_field_index("term")
+    return [(md.row_group(i).column(col).statistics.min,
+             md.row_group(i).column(col).statistics.max)
+            for i in range(md.num_row_groups)]
 
 
 def _assert_serving_parity(idx, srv):
@@ -279,11 +291,13 @@ def _assert_serving_parity(idx, srv):
 
 
 def test_serve_parity_on_many_row_groups(spark, corpus, tmp_path,
-                                         small_row_groups):
+                                         monkeypatch):
     import pyarrow.parquet as pq
+    from pg_textsearch_spark.index import build
     # identity layout: appends need it
     idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
                           id_col="id", opts=OPTS, num_segments=3)
+    _regroup_postings(idx, 5)
     for f in _postings_files(idx):
         assert pq.ParquetFile(f).metadata.num_row_groups > 5, f
     srv = idx.serving()
@@ -295,28 +309,32 @@ def test_serve_parity_on_many_row_groups(spark, corpus, tmp_path,
         srv.search("quick brown", k=10)["doc_id"].tolist())
     _assert_serving_parity(idx, srv)
 
+    # the appended segment keeps the builder's one-group layout for a
+    # batch this small: a mixed index
     extra = spark.createDataFrame(
         [(1000 + i, "quick brown fox quick brown fox river") for i in range(5)],
         "id long, content string")
     idx.append(extra, "content", "id")
     _assert_serving_parity(idx, srv)
 
+    # a merge writes the builder's layout with Spark's writer: every part
+    # file term-sorted in bounded row groups (the bound is read on the
+    # driver that plans the merge)
+    monkeypatch.setattr(build, "POSTINGS_ROW_GROUP_ROWS", 5)
+    idx.force_merge()
+    assert len(idx.manifest.segments) == 1
+    multi = 0
+    for f in _postings_files(idx):
+        ranges = _term_ranges(f)
+        assert all(lo <= hi for lo, hi in ranges), f
+        assert all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:])), f
+        multi += len(ranges) > 1
+    assert multi
+    _assert_serving_parity(idx, srv)
 
-def test_cold_fetch_reads_only_row_groups_holding_the_term(
-        spark, corpus, tmp_path, small_row_groups, monkeypatch):
+
+def _spy_row_group_reads(monkeypatch):
     import pyarrow.parquet as pq
-    from pg_textsearch_spark.functions.tokenizer import tokenize_query
-    idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
-                          id_col="id", opts=RG_OPTS, num_segments=1)
-    (path,) = _postings_files(idx)
-    md = pq.ParquetFile(path).metadata
-    col = md.schema.to_arrow_schema().get_field_index("term")
-    (term, _), = tokenize_query("river", RG_OPTS.text_config)
-    holding = [i for i in range(md.num_row_groups)
-               if md.row_group(i).column(col).statistics.min <= term
-               <= md.row_group(i).column(col).statistics.max]
-    assert 1 <= len(holding) < md.num_row_groups
-
     reads = []
     orig = pq.ParquetFile.read_row_groups
 
@@ -325,6 +343,22 @@ def test_cold_fetch_reads_only_row_groups_holding_the_term(
         return orig(self, row_groups, *a, **kw)
 
     monkeypatch.setattr(pq.ParquetFile, "read_row_groups", spy)
+    return reads
+
+
+def test_cold_fetch_reads_only_row_groups_holding_the_term(
+        spark, corpus, tmp_path, monkeypatch):
+    from pg_textsearch_spark.functions.tokenizer import tokenize_query
+    idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=RG_OPTS, num_segments=1)
+    _regroup_postings(idx, 5)
+    (path,) = _postings_files(idx)
+    ranges = _term_ranges(path)
+    (term, _), = tokenize_query("river", RG_OPTS.text_config)
+    holding = [i for i, (lo, hi) in enumerate(ranges) if lo <= term <= hi]
+    assert 1 <= len(holding) < len(ranges)
+
+    reads = _spy_row_group_reads(monkeypatch)
     srv = LocalSearcher(idx.path)
     rows, gdf = srv._fetch([term])
     assert reads == [holding]
@@ -334,13 +368,41 @@ def test_cold_fetch_reads_only_row_groups_holding_the_term(
     assert reads == [holding]
 
 
-def test_single_row_group_postings_serve_identically(spark, corpus, tmp_path,
-                                                     small_row_groups):
-    """Older builds and Spark-written merge outputs hold one row group per
-    postings file; the same reader serves them."""
+def test_cold_fetch_prunes_row_groups_of_a_merged_segment(
+        spark, tmp_path, monkeypatch):
+    """Spark-written merge outputs get the same footer-range pruning as
+    built segments."""
+    from pg_textsearch_spark.functions.tokenizer import tokenize_query
+    from pg_textsearch_spark.index import build
+    docs = spark.createDataFrame(
+        [(i, f"{_text(i)} w{i % 60} v{i % 37}") for i in range(1, 401)],
+        "id long, content string")
+    idx = Bm25Index.build(spark, docs, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=OPTS, num_segments=3)
+    monkeypatch.setattr(build, "POSTINGS_ROW_GROUP_ROWS", 8)
+    idx.force_merge()
+    files = _postings_files(idx)
+    (term, _), = tokenize_query("w17", OPTS.text_config)
+    want = [[i for i, (lo, hi) in enumerate(_term_ranges(f))
+             if lo <= term <= hi] for f in files]
+    n_groups = sum(len(_term_ranges(f)) for f in files)
+
+    reads = _spy_row_group_reads(monkeypatch)
+    srv = LocalSearcher(idx.path)
+    rows, _ = srv._fetch([term])
+    assert reads == [w for w in want if w]
+    assert 0 < sum(map(len, reads)) < n_groups / 2
+    assert serve_rows(srv.search("w17 river", k=10)) == \
+        spark_rows(idx.search("w17 river", k=10))
+
+
+def test_single_row_group_postings_serve_identically(spark, corpus, tmp_path):
+    """Older builds hold one row group per postings file; the same reader
+    serves them."""
     import pyarrow.parquet as pq
     idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
                           id_col="id", opts=RG_OPTS, num_segments=2)
+    _regroup_postings(idx, 5)
     many = idx.serving()
     qs = QUERIES + ["quick brown fox river"]
     before = [serve_rows(many.search(q, k=10)) for q in qs]
@@ -356,6 +418,49 @@ def test_single_row_group_postings_serve_identically(spark, corpus, tmp_path,
     assert serve_rows(one.search("lazy dog", k=10, mode="phrase")) == phrase
     assert one.search_batch(qs, k=5).equals(batch)
     assert one.resolve(one.search("quick brown fox", k=10)).equals(resolved)
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/fd"),
+                    reason="needs /proc/self/fd")
+def test_serving_holds_no_file_descriptors(spark, corpus, tmp_path):
+    """A replica keeps parsed footers, not open files: touching every
+    postings and docmap file of many segments leaves the process's
+    descriptor count where it was."""
+    idx = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=OPTS, num_segments=8)
+    srv = LocalSearcher(idx.path, cache_terms=2)
+    before = len(os.listdir("/proc/self/fd"))
+    for w in WORDS + ["doc"]:
+        srv.resolve(srv.search(w, k=5), cols=("source_id", "doc_len"))
+    assert len(srv._seg_files) == len(idx.manifest.segments)
+    assert len(os.listdir("/proc/self/fd")) <= before
+
+
+@pytest.mark.parametrize("titled", ["build", "append"])
+def test_serve_resolve_column_missing_from_a_segment(spark, tmp_path, titled):
+    """Docmap columns follow the frame a segment was written from: a
+    column only the build (or only an append batch) had resolves to null
+    for the other segment's docs, whichever segment is listed first."""
+    def batch(ids, text):
+        rows = [(i, text(i), f"title {i}") for i in ids]
+        df = spark.createDataFrame(rows, "id long, content string, "
+                                         "title string")
+        return df if (ids[0] < 1000) == (titled == "build") \
+            else df.drop("title")
+
+    idx = Bm25Index.build(spark, batch(list(range(1, 41)), _text), "content",
+                          str(tmp_path / "idx"), id_col="id", opts=OPTS,
+                          num_segments=1)
+    idx.append(batch([1000, 1001, 1002], lambda i: "quick brown fox"),
+               "content", "id")
+    srv = idx.serving()
+    got = srv.resolve(srv.search("quick brown fox", k=None),
+                      cols=("source_id", "title"))
+    ids = got["doc_id"].tolist()
+    assert any(d >= 1000 for d in ids) and any(d < 1000 for d in ids)
+    for d, t in zip(ids, got["title"]):
+        has = (d < 1000) == (titled == "build")
+        assert (t == f"title {d}") if has else (t is None), (d, t)
 
 
 def test_ann_search_vectors_zero_query(spark, tmp_path):
