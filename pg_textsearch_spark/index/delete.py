@@ -19,12 +19,12 @@ Spark-native equivalent is a *tombstone sidecar*:
 
 Scale note: tombstones stay distributed (a DataFrame anti-join) on the
 merge path. The query path ships only the ids overlapping live segments'
-doc-id ranges: :func:`deletes_by_segment` slices the sorted id array per
-segment using the manifest's ``min_doc_id``/``max_doc_id`` (ids outside
-every range are dropped on the driver), and :func:`tombstone_broadcast`
-ships the per-segment dict ONCE per executor as a Spark torrent broadcast
-— never inside per-task closures. This is the Spark analogue of the
-reference's per-segment bitset locality (src/segment/alive_bitset.c).
+doc-id ranges: :func:`live_deletes` keeps the sorted ids that fall in some
+segment's ``min_doc_id``/``max_doc_id`` range (ids outside every range are
+dropped on the driver), and :func:`tombstone_broadcast` ships that one
+sorted array ONCE per executor as a Spark torrent broadcast — never inside
+per-task closures. Kernels mask with a binary search into it, whichever
+segments their rows come from.
 """
 
 from __future__ import annotations
@@ -74,8 +74,7 @@ def delete_docs(index, doc_ids) -> int:
 
 
 def load_deletes(index) -> np.ndarray:
-    """All tombstoned ids as a sorted unique int64 array (driver-side;
-    per-query the kernel slices this to each segment's doc range)."""
+    """All tombstoned ids as a sorted unique int64 array (driver-side)."""
     path = _deletes_path(index)
     if not os.path.isdir(path) or not any(
             f.endswith(".parquet") for f in os.listdir(path)):
@@ -85,25 +84,24 @@ def load_deletes(index) -> np.ndarray:
     return np.unique(arr.astype(np.int64))
 
 
-def deletes_by_segment(index) -> dict[str, np.ndarray] | None:
-    """Slice the sorted tombstone ids to each live segment's
-    [min_doc_id, max_doc_id] range. Ids outside every segment's range are
-    dropped here on the driver — nothing dead-in-no-segment ever ships."""
+def live_deletes(index) -> np.ndarray | None:
+    """The sorted tombstone ids that fall in some live segment's
+    [min_doc_id, max_doc_id] range, or None when there are none. Ids
+    outside every range are dropped here on the driver — nothing
+    dead-in-no-segment ever ships."""
     arr = load_deletes(index)
     if not arr.size:
         return None
-    out: dict[str, np.ndarray] = {}
+    keep = np.zeros(arr.size, dtype=bool)
     for s in index.manifest.segments:
-        lo = np.searchsorted(arr, s.min_doc_id, side="left")
-        hi = np.searchsorted(arr, s.max_doc_id, side="right")
-        if hi > lo:
-            out[s.segment_id] = arr[lo:hi]
-    return out or None
+        keep[np.searchsorted(arr, s.min_doc_id, side="left"):
+             np.searchsorted(arr, s.max_doc_id, side="right")] = True
+    return arr[keep] if keep.any() else None
 
 
 def tombstone_broadcast(index):
-    """Per-segment tombstone dict as a cached Spark broadcast (shipped once
-    per executor via torrent broadcast, NOT serialized into every task).
+    """:func:`live_deletes` as a cached Spark broadcast (shipped once per
+    executor via torrent broadcast, NOT serialized into every task).
     Returns None when there are no tombstones. Cache key = deletes file
     listing + manifest version, so appends/merges/deletes invalidate it."""
     path = _deletes_path(index)
@@ -117,8 +115,8 @@ def tombstone_broadcast(index):
             cached[1].unpersist()
         except Exception:
             pass
-    m = deletes_by_segment(index)
-    bc = index.spark.sparkContext.broadcast(m) if m else None
+    arr = live_deletes(index)
+    bc = index.spark.sparkContext.broadcast(arr) if arr is not None else None
     index._tomb_bc = (ver, bc)
     return bc
 

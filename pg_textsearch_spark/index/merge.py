@@ -129,7 +129,7 @@ def merge_segments(index, seg_records: list[SegmentRecord], out_level: int,
     # slice to the ids that can occur in THIS merge's inputs (the union of
     # the input segments' doc-id ranges) — the broadcast scales with the
     # churn of the merged slice, not the index-lifetime tombstone total
-    # (same locality the query path gets from deletes_by_segment)
+    # (same locality the query path gets from live_deletes)
     if deleted.size:
         s_lo = np.searchsorted(deleted, lo, side="left")
         s_hi = np.searchsorted(deleted, hi, side="right")

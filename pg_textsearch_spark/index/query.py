@@ -38,16 +38,26 @@ oracle) orders by. Per-kernel ``blocks_decoded``/``blocks_total`` counters
 (the reference's log_bmw_stats analogue) are exposed via ``profile=True``
 / :func:`search_profiled`.
 
-Tombstone masking is distributed: the driver slices the sorted tombstone
-array to each segment's [min_doc_id, max_doc_id] from the manifest and
-ships the per-segment dict ONCE per executor as a Spark broadcast
-(delete.tombstone_broadcast) — the Spark analogue of the reference's
-per-segment alive bitset locality (src/segment/alive_bitset.c).
+The kernels are segment-agnostic: a term's reader spans every shard row
+it is handed, whatever segment each row came from, and accumulation is
+keyed by doc id (unique across segments). The Spark path hands each
+kernel one segment's rows (``applyInPandas`` over ``segment_id``, for
+parallelism); the serving path (index/serve.py) hands ONE kernel call the
+rows of every segment, so one MaxScore pass and one top-k heap span the
+whole index — the reference's single cross-segment BMW scan
+(src/scoring/bmw.c:1477-1716).
+
+Tombstones reach the kernels as ONE sorted id array: the ids that fall
+in some live segment's [min_doc_id, max_doc_id] (delete.live_deletes),
+shipped once per executor as a Spark broadcast on the Spark path
+(delete.tombstone_broadcast). Readers mask dead ids right after block
+decode with a binary search into it.
 """
 
 from __future__ import annotations
 
 import math
+from bisect import bisect_left
 from collections import OrderedDict
 from typing import TYPE_CHECKING
 
@@ -81,24 +91,39 @@ def _resolve_k(k, opts: Bm25Options) -> int | None:
     return int(k)
 
 
+def _holds(vals, rng) -> bool:
+    """Whether sorted ``vals`` hold a value in the closed range ``rng``
+    ((min, max), or None for a range that was never recorded)."""
+    if rng is None:
+        return True
+    j = bisect_left(vals, rng[0])
+    return j < len(vals) and vals[j] <= rng[1]
+
+
+def _segments_holding(segments, terms: list[str]) -> list:
+    """Segment records whose dictionary term range [term_min, term_max]
+    can hold one of the SORTED ``terms``: a bisect per segment, so the
+    cost is O(segments x log terms). Records without a recorded range
+    (older builds) are always kept. Shared by the Spark read and the
+    serving fetch, so both prune segments by one predicate."""
+    return [s for s in segments
+            if not (s.term_min and s.term_max)
+            or _holds(terms, (s.term_min, s.term_max))]
+
+
 def _prune_segments_by_term(index: "Bm25Index",
                             terms: list[str]) -> list[str]:
-    """Postings dirs of segments whose dictionary term range
-    [term_min, term_max] can contain at least one query term — whole
-    segment DIRECTORIES drop before Spark ever lists their files (the
-    manifest-level pruning layer above the parquet footer min/max that
-    prunes row groups within a scanned file). Records without a recorded
-    range (older builds) are always kept."""
+    """Postings dirs of segments whose dictionary term range can contain
+    at least one query term — whole segment DIRECTORIES drop before Spark
+    ever lists their files (the manifest-level pruning layer above the
+    parquet footer min/max that prunes row groups within a scanned
+    file)."""
     from .build import POSTINGS_DIR
     import os as _os
-    keep = []
-    for s in index.manifest.segments:
-        if (s.term_min and s.term_max
-                and not any(s.term_min <= t <= s.term_max for t in terms)):
-            continue
-        keep.append(_os.path.join(index.manifest.segment_dir(s.segment_id),
-                                  POSTINGS_DIR))
-    return keep
+    return [_os.path.join(index.manifest.segment_dir(s.segment_id),
+                          POSTINGS_DIR)
+            for s in _segments_holding(index.manifest.segments,
+                                       sorted(set(terms)))]
 
 
 def _read_postings(index: "Bm25Index", terms: list[str]) -> DataFrame:
@@ -142,11 +167,13 @@ def term_stats(index: "Bm25Index", terms: list[str]) -> DataFrame:
 
 
 class _TermReader:
-    """Lazily-decoding posting reader for ONE term within ONE segment.
+    """Lazily-decoding posting reader for ONE term.
 
-    Wraps the term's shard rows. Skip metadata gives a per-block score
-    upper bound; blocks decode on demand (random access via the skip
-    entries' byte offsets) into a per-block cache of
+    Wraps the term's shard rows — one segment's on the Spark path, every
+    segment's on the serving path; each row carries its own doc range, so
+    nothing here depends on which segment a row came from. Skip metadata
+    gives a per-block score upper bound; blocks decode on demand (random
+    access via the skip entries' byte offsets) into a per-block cache of
     ``(doc_ids, unit_contrib)`` where ``unit_contrib =
     tf*(k1+1)/(tf+denom)`` is the query-weight-INDEPENDENT BM25 factor —
     so in a batched query one decode serves every query that touches the
@@ -160,7 +187,8 @@ class _TermReader:
     __slots__ = ("rows", "block_size", "codec", "denom_norm", "k1",
                  "deleted", "counters", "frow", "fbnd", "flast",
                  "row_start", "row_nblocks", "n_blocks", "max_unit_bound",
-                 "bound_order", "_cache", "_pos", "_all")
+                 "bound_order", "sorted_bnd", "rmin", "rlast", "_cache",
+                 "_pos", "_all")
 
     def __init__(self, rows: list[dict], block_size: int, codec: str,
                  denom_norm: np.ndarray, k1: float,
@@ -193,6 +221,11 @@ class _TermReader:
         # bound-descending decode order; ties broken by flat index ASC so
         # progressive decode is deterministic
         self.bound_order = np.lexsort((np.arange(self.n_blocks), -self.fbnd))
+        self.sorted_bnd = self.fbnd[self.bound_order]   # non-increasing
+        self.rmin = np.asarray([int(r["min_doc_id"]) for r in rows],
+                               dtype=np.int64)
+        self.rlast = np.asarray([int(r["last_doc_id"]) for r in rows],
+                                dtype=np.int64)
         self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self._pos: dict[tuple[int, int], tuple | None] = {}
         self._all: tuple[np.ndarray, np.ndarray] | None = None
@@ -313,11 +346,12 @@ class _TermReader:
         out = np.zeros(cand_ids.size, dtype=np.float64)
         if cand_ids.size == 0:
             return out
-        for ri, r in enumerate(self.rows):
-            sel = cand_ids[(cand_ids >= int(r["min_doc_id"]))
-                           & (cand_ids <= int(r["last_doc_id"]))]
-            if sel.size == 0:
-                continue
+        # each row's candidates are one slice of the sorted candidates;
+        # rows (of any segment) without a candidate cost nothing
+        los = np.searchsorted(cand_ids, self.rmin, side="left")
+        his = np.searchsorted(cand_ids, self.rlast, side="right")
+        for ri in np.flatnonzero(his > los):
+            sel = cand_ids[los[ri]:his[ri]]
             lasts = self.flast[self.row_start[ri]:self.row_start[ri + 1]]
             blocks = np.unique(np.searchsorted(lasts, sel, side="left"))
             ids, cs = self.get(blocks + self.row_start[ri])
@@ -327,32 +361,31 @@ class _TermReader:
             pos = np.searchsorted(ids, sel)
             hit = pos < ids.size
             hit[hit] = ids[pos[hit]] == sel[hit]
-            if hit.any():
-                idx = np.searchsorted(cand_ids, sel[hit])
-                out[idx] += cs[pos[hit]]
+            out[los[ri]:his[ri]][hit] += cs[pos[hit]]
         return out
 
 
-def _readers_for(per_term: dict, seg_id: str, block_size: int, codec: str,
+def _readers_for(per_term: dict, block_size: int, codec: str,
                  denom_norm: np.ndarray, k1: float, deleted, counters: dict,
                  reader_cache: dict | None) -> dict:
-    """One _TermReader per term — from ``reader_cache`` (keyed by
-    (segment_id, term)) when the serving path supplies one, so decoded
-    blocks persist ACROSS queries (the caller owns invalidation: the
-    cache must be cleared on manifest reload or tombstone change, since
-    readers mask deletions at decode time). In-Spark kernels pass None —
-    executors already share decodes within a batch via the reader itself."""
+    """One _TermReader per term — from ``reader_cache`` (keyed by term)
+    when the serving path supplies one, so decoded blocks persist ACROSS
+    queries (the caller owns invalidation: an entry must go when its term
+    leaves the term cache, and all of them on manifest reload or
+    tombstone change, since readers mask deletions at decode time).
+    In-Spark kernels pass None — executors already share decodes within a
+    batch via the reader itself."""
     if reader_cache is None:
         return {t: _TermReader(rows_, block_size, codec, denom_norm, k1,
                                deleted, counters)
                 for t, rows_ in per_term.items()}
     out = {}
     for t, rows_ in per_term.items():
-        r = reader_cache.get((seg_id, t))
+        r = reader_cache.get(t)
         if r is None:
             r = _TermReader(rows_, block_size, codec, denom_norm, k1,
                             deleted, counters)
-            reader_cache[(seg_id, t)] = r
+            reader_cache[t] = r
         else:
             r.counters = counters   # per-query profile counters rebind
         out[t] = r
@@ -363,25 +396,42 @@ def _accumulate(id_parts: list, sc_parts: list):
     all_ids = np.concatenate(id_parts)
     all_sc = np.concatenate(sc_parts)
     uniq, inv = np.unique(all_ids, return_inverse=True)
-    scores = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(scores, inv, all_sc)
-    counts = np.zeros(uniq.size, dtype=np.int64)
-    np.add.at(counts, inv, 1)
+    # bincount adds in input order, like np.add.at, at a fraction of its cost
+    scores = np.bincount(inv, weights=all_sc, minlength=uniq.size)
+    counts = np.bincount(inv, minlength=uniq.size)
     return uniq, scores, counts
 
 
+def _top_k(uniq: np.ndarray, scores: np.ndarray, k: int,
+           round_to: int) -> np.ndarray:
+    """Indices of the top ``k`` by (ROUNDED score desc, doc_id asc) — the
+    ordering the global stage and the oracle use, so a k-boundary cut can
+    never disagree across rounding ties. An O(n) partition pre-cuts to the
+    rows at or above the kth rounded score (keeping every boundary tie),
+    so the lexsort runs over about k rows, not the whole candidate set."""
+    rs = np.round(scores, round_to)
+    cand = np.arange(uniq.size)
+    if uniq.size > 4 * k:
+        cut = np.partition(rs, rs.size - k)[rs.size - k]
+        cand = np.flatnonzero(rs >= cut)
+    return cand[np.lexsort((uniq[cand], -rs[cand]))[:k]]
+
+
 def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
-                  k: int | None, eps: float, init_kth: float = 0.0,
-                  stats: dict | None = None):
+                  k: int | None, eps: float):
     """Exact MaxScore + block-max top-k over lazily-decoded term readers.
 
     The engine's BMW core (reference src/scoring/bmw.c:469-642 single-term,
-    1477-1716 multi-term), term-at-a-time over columnar blocks:
+    1477-1716 multi-term), term-at-a-time over columnar blocks. A reader
+    may span several segments: its blocks are ranked by bound across all
+    of them, so one pass and one running kth cover the whole index.
 
     - the FIRST term in MaxScore order decodes progressively: blocks in
-      descending bound order, doubling batches, stopping once the next
-      block's bound plus the other terms' bounds cannot beat the running
-      kth contribution;
+      descending bound order, doubling batches. Once k docs are banked, a
+      batch never reaches past the last block whose bound plus the other
+      terms' bounds can still beat the running kth contribution (a
+      ``searchsorted`` over the bound-sorted blocks), so a batch cannot
+      overshoot into blocks — or whole segments — that cannot matter;
     - each LATER essential term decodes only blocks whose bound plus the
       other terms' bounds can beat the kth accumulated partial score;
     - once the remaining terms' summed bounds cannot beat the kth partial
@@ -389,26 +439,14 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
 
     All thresholds carry ``eps`` slack so pruning never disturbs ties at
     the ROUNDED-score boundary. Returns (uniq_ids, scores, partial_counts)
-    or None when no postings survive.
-
-    ``init_kth`` seeds the pruning threshold with a kth score already
-    known to be achieved elsewhere (the serving path's running global
-    top-k across its sequential per-segment loop — the reference's
-    cross-segment cursor, src/scoring/bmw.c:1477-1716, where one heap
-    spans the whole scan). Docs provably below it can never enter the
-    global top-k, so whole segments whose summed bounds fall short skip
-    without decoding a block. The CALLER must cut the merged results at
-    the true global top-k: returned scores below ``init_kth - eps`` may
-    be partial (standard MaxScore invariant — an under-scored doc is
-    provably below the threshold that skipped its blocks).
+    or None when no postings survive. Scores of docs below the final kth
+    may be partial (standard MaxScore invariant — an under-scored doc is
+    provably below the threshold that skipped its blocks), so the caller
+    cuts at k.
     """
     bounds = {t: weights[t] * r.max_unit_bound for t, r in readers.items()}
     order = sorted(readers, key=lambda t: (-bounds[t], t))
     total_bound = sum(bounds.values())
-    if k is not None and init_kth > 0.0 and total_bound < init_kth - eps:
-        if stats is not None:
-            stats["segments_skipped"] = stats.get("segments_skipped", 0) + 1
-        return None
     id_parts, sc_parts = [], []
     uniq = scores = counts = None
     nonessential_from = len(order)
@@ -418,18 +456,20 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
         w = weights[t]
         other = total_bound - bounds[t]
         if i == 0:
-            bo, fb = rd.bound_order, rd.fbnd
-            total = bo.size
+            bo = rd.bound_order
+            # best total each block in decode order can still reach:
+            # non-increasing, so the blocks that can beat a kth are a
+            # prefix of ``bo``
+            reach = w * rd.sorted_bnd + other
+            limit = bo.size
             ids_p, sc_p = [], []
             n_seen, pos, batch = 0, 0, 4
-            # running top-k buffer of first-term contributions: the kth
-            # threshold used to re-partition the FULL concatenated score
-            # array on every batch (O(total) per step — the warm-path
-            # hot spot at 2 M docs); keeping only the k largest so far
-            # yields the identical kth in O(k + batch) per step
+            # running top-k buffer of first-term contributions: yields the
+            # kth in O(k + batch) per step instead of re-partitioning
+            # every contribution seen so far
             run_top = np.empty(0, dtype=np.float64)
-            while pos < total:
-                take = min(batch, total - pos)
+            while pos < limit:
+                take = min(batch, limit - pos)
                 ids, cs = rd.get(bo[pos:pos + take])
                 if ids.size:
                     ids_p.append(ids)
@@ -443,13 +483,10 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
                                 run_top, run_top.size - k)[run_top.size - k:]
                 pos += take
                 batch = min(batch * 2, 1024)
-                if pos >= total or k is None:
-                    continue
-                kth = init_kth
-                if n_seen >= k:
-                    kth = max(kth, float(run_top.min()))
-                if kth > 0.0 and w * fb[bo[pos]] + other < kth - eps:
-                    break
+                if k is not None and n_seen >= k:
+                    # count of blocks with reach >= kth - eps
+                    limit = min(limit, int(np.searchsorted(
+                        -reach, eps - float(run_top.min()), side="right")))
             if ids_p:
                 id_parts.append(np.concatenate(ids_p))
                 sc_parts.append(np.concatenate(sc_p))
@@ -460,10 +497,9 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
                 u = np.empty(0, dtype=np.int64)
                 sc = np.empty(0, dtype=np.float64)
                 cn = np.empty(0, dtype=np.int64)
-            kth = init_kth if (k is not None and init_kth > 0.0) else None
+            kth = None
             if k is not None and sc.size >= k:
-                kl = np.partition(sc, sc.size - k)[sc.size - k]
-                kth = kl if kth is None else max(kth, kl)
+                kth = np.partition(sc, sc.size - k)[sc.size - k]
             if kth is not None and remaining < kth - eps:
                 uniq, scores, counts = u, sc, cn
                 nonessential_from = i
@@ -483,12 +519,10 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
     if uniq is None:
         uniq, scores, counts = _accumulate(id_parts, sc_parts)
     if nonessential_from < len(order):
+        # reached only with >= k accumulated docs (the break above)
         rem_terms = order[nonessential_from:]
         rem_bound = sum(bounds[t] for t in rem_terms)
-        kth = init_kth
-        if scores.size >= k:
-            kth = max(kth, np.partition(scores,
-                                        scores.size - k)[scores.size - k])
+        kth = np.partition(scores, scores.size - k)[scores.size - k]
         cand_mask = scores + rem_bound >= kth - eps
         cand_ids = uniq[cand_mask]
         for t in rem_terms:
@@ -515,22 +549,25 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
                         mode: str, phrase_occs: list[tuple[str, int]] | None,
                         deleted_bc=None, static_df: dict[str, int] | None = None,
                         round_to: int = 4, profile: bool = False,
-                        df_accum=None, reader_cache: dict | None = None,
-                        shared_topk: dict | None = None):
-    """Build the applyInPandas kernel. ``qfreqs``: term -> query frequency.
+                        df_accum=None, reader_cache: dict | None = None):
+    """Build the scoring kernel. ``qfreqs``: term -> query frequency.
+
+    ``kernel(key, rows)`` scores whatever shard rows it is handed: one
+    segment's pandas frame under ``applyInPandas`` over ``segment_id``
+    (``key[0]`` is then the segment id, used only for profile columns),
+    or the serving path's one list of row dicts spanning every segment.
 
     IDFs are computed inside the kernel from the ``gdf`` column (global
     doc_freq attached by a window aggregate in the same job — Q2 without a
     separate driver round-trip; every segment sees the same global value,
     so scores are independent of segment layout, SURVEY.md §1.4).
 
-    ``deleted_bc``: Spark broadcast (or plain dict in unit tests) mapping
-    segment_id -> sorted tombstoned ids overlapping that segment's doc
-    range. Dead postings are masked right after block decode — before any
-    accumulation or pruning — so thresholds only ever see alive docs (the
-    reference checks its alive bitset per hit the same way). Stats stay
-    dead-inclusive until a merge, matching reference VACUUM semantics
-    (SURVEY.md §2.2 M4)."""
+    ``deleted_bc``: the sorted tombstoned ids (delete.live_deletes), as a
+    Spark broadcast or a plain array, or None. Dead postings are masked
+    right after block decode — before any accumulation or pruning — so
+    thresholds only ever see alive docs (the reference checks its alive
+    bitset per hit the same way). Stats stay dead-inclusive until a merge,
+    matching reference VACUUM semantics (SURVEY.md §2.2 M4)."""
     k1, b = float(opts.k1), float(opts.b)
     # norm code -> BM25 tf-denominator length component, precomputed once
     norm_len = DECODE_TABLE.astype(np.float64)
@@ -548,17 +585,15 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
                      "pos_blocks_total"]
 
     def kernel(key, pdf):
-        seg_id = str(key[0])
         spec = {"doc_id": "int64", "raw_score": "float64", "n_terms": "int32",
                 "segment_id": "object", "blocks_decoded": "int64",
                 "blocks_predecoded": "int64",
                 "blocks_total": "int64", "pos_blocks_decoded": "int64",
                 "pos_blocks_total": "int64"}
         # Spark hands an Arrow-decoded pandas frame; the serving path
-        # (index/serve.py) hands a pre-sorted list of row dicts AND gets
-        # back raw (doc_ids, scores) arrays — per-segment frame
-        # construction on BOTH sides was the bulk of warm point-query
-        # latency (pandas in 85%, pandas out most of the rest)
+        # (index/serve.py) hands a list of row dicts AND gets back raw
+        # (doc_ids, scores) arrays — frame construction on BOTH sides was
+        # the bulk of warm point-query latency
         as_arrays = not isinstance(pdf, pd.DataFrame)
         if as_arrays and profile:
             raise ValueError("array fast path does not carry profile "
@@ -578,10 +613,7 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
         for rec in recs:
             per_term.setdefault(rec["term"], []).append(rec)
 
-        deleted = None
-        if deleted_bc is not None:
-            dmap = getattr(deleted_bc, "value", deleted_bc)
-            deleted = dmap.get(seg_id) if dmap else None
+        deleted = getattr(deleted_bc, "value", deleted_bc)
 
         # global IDF: from the driver's df cache when warm (static), else
         # from the window-attached gdf column (identical on every shard
@@ -598,15 +630,6 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
                 # window without a separate cache-warming job
                 df_accum.add(gdfs)
 
-        blocks_total = sum(int(r["num_blocks"])
-                           for rows_ in per_term.values() for r in rows_)
-        pos_blocks_total = 0
-        if phrase_occs is not None:
-            pterms = {t for t, _ in phrase_occs}
-            pos_blocks_total = sum(
-                int(r["num_blocks"]) for t in pterms
-                for r in per_term.get(t, ())
-                if r.get("pos_counts_bin") is not None)
         counters = {"decoded": 0, "pos_decoded": 0}
 
         def finish(out: pd.DataFrame) -> pd.DataFrame:
@@ -615,15 +638,23 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
             doc was pruned (search_profiled splits sentinels back out)."""
             if not profile:
                 return out
+            pos_blocks_total = 0
+            if phrase_occs is not None:
+                pterms = {t for t, _ in phrase_occs}
+                pos_blocks_total = sum(
+                    int(r["num_blocks"]) for t in pterms
+                    for r in per_term.get(t, ())
+                    if r.get("pos_counts_bin") is not None)
             sent = pd.DataFrame({"doc_id": np.array([-1], dtype=np.int64),
                                  "raw_score": np.array([0.0]),
                                  "n_terms": np.array([-1], dtype=np.int32)})
             out = pd.concat([out, sent], ignore_index=True) if len(out) else sent
-            out["segment_id"] = seg_id
+            out["segment_id"] = str(key[0])
             out["blocks_decoded"] = np.int64(counters["decoded"])
             out["blocks_predecoded"] = np.int64(
                 counters.get("predecoded", 0))
-            out["blocks_total"] = np.int64(blocks_total)
+            out["blocks_total"] = np.int64(sum(
+                int(r["num_blocks"]) for r in recs))
             out["pos_blocks_decoded"] = np.int64(counters["pos_decoded"])
             out["pos_blocks_total"] = np.int64(pos_blocks_total)
             return out[out_cols]
@@ -638,7 +669,7 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
             ids_l: list[np.ndarray] = []
             pls: list[np.ndarray] = []
             rd = readers[t]
-            for ri, r in enumerate(per_term.get(t, ())):
+            for ri, r in enumerate(rd.rows):
                 sub = cand[(cand >= int(r["min_doc_id"]))
                            & (cand <= int(r["last_doc_id"]))]
                 if not sub.size:
@@ -666,15 +697,10 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
         if can_prune:
             # MaxScore + block-max over lazily-decoded readers (shared
             # implementation with search_batch — _run_maxscore)
-            readers = _readers_for(per_term, seg_id, opts.block_size,
-                                   opts.codec, denom_norm, k1, deleted,
-                                   counters, reader_cache)
-            # the serving loop threads its running global kth through
-            # shared_topk so later segments prune against it (and whole
-            # segments skip); Spark kernels run in parallel — None there
-            res = _run_maxscore(readers, weights, k, eps,
-                                init_kth=(shared_topk or {}).get("kth", 0.0),
-                                stats=shared_topk)
+            readers = _readers_for(per_term, opts.block_size, opts.codec,
+                                   denom_norm, k1, deleted, counters,
+                                   reader_cache)
+            res = _run_maxscore(readers, weights, k, eps)
             if res is None:
                 return empty_pair if as_arrays else finish(
                     empty_frame(["doc_id", "raw_score", "n_terms"]))
@@ -684,9 +710,9 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
             # counts; phrase needs the positions of every matched doc) —
             # decoded through the same readers so the serving path's
             # cross-query cache covers and/phrase too
-            readers = _readers_for(per_term, seg_id, opts.block_size,
-                                   opts.codec, denom_norm, k1, deleted,
-                                   counters, reader_cache)
+            readers = _readers_for(per_term, opts.block_size, opts.codec,
+                                   denom_norm, k1, deleted, counters,
+                                   reader_cache)
             bounds = {t: weights[t] * readers[t].max_unit_bound
                       for t in per_term}
             order = sorted(per_term, key=lambda t: (-bounds[t], t))
@@ -725,18 +751,7 @@ def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
             uniq, scores, counts = uniq[keep], scores[keep], counts[keep]
 
         if k is not None and uniq.size > k:
-            # local top-k with (ROUNDED score desc, doc_id asc) tie order —
-            # the same ordering the global stage and the oracle use, so the
-            # k-boundary cut can never disagree across rounding ties.
-            # Pre-cut with an O(n) partition (keeping ALL rounded-score
-            # ties at the boundary) so the lexsort runs over ~k rows, not
-            # the full candidate set
-            rs = np.round(scores, round_to)
-            if uniq.size > 4 * k:
-                cut = np.partition(rs, rs.size - k)[rs.size - k]
-                m = rs >= cut
-                uniq, scores, counts, rs = uniq[m], scores[m], counts[m], rs[m]
-            sel = np.lexsort((uniq, -rs))[:k]
+            sel = _top_k(uniq, scores, k, round_to)
             uniq, scores, counts = uniq[sel], scores[sel], counts[sel]
         if as_arrays:
             return uniq.astype(np.int64), scores
@@ -933,9 +948,11 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
                       round_to: int = 4, profile: bool = False,
                       deleted_bc=None, static_df: dict[str, int] | None = None,
                       reader_cache: dict | None = None):
-    """Build the per-segment batched-retrieval kernel (shared by the Spark
-    ``search_batch`` path and the driver-local serving path). ``per_query``:
-    tokenized (term, qfreq) lists. Global doc_freq comes from ``static_df``
+    """Build the batched-retrieval kernel (shared by the Spark
+    ``search_batch`` path, one call per segment, and the driver-local
+    serving path, one call over every segment's rows). ``per_query``:
+    tokenized (term, qfreq) lists. Each query's output is already cut to
+    its top k. Global doc_freq comes from ``static_df``
     when given (serving path / warm cache), else from the window-attached
     ``gdf`` column."""
     n = int(n_docs)
@@ -948,7 +965,6 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
     denom_norm = k1 * (1.0 - b + b * norm_len / avgdl)
 
     def kernel(key, pdf):
-        seg_id = str(key[0])
         as_arrays = not isinstance(pdf, pd.DataFrame)   # serving fast path
         if as_arrays and profile:
             raise ValueError("array fast path does not carry profile "
@@ -956,15 +972,12 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
         empty_cols = {"query_id": np.empty(0, np.int32),
                       "doc_id": np.empty(0, np.int64),
                       "raw_score": np.empty(0, np.float64)}
-        deleted = None
-        if deleted_bc is not None:
-            dmap = getattr(deleted_bc, "value", deleted_bc)
-            deleted = dmap.get(seg_id) if dmap else None
+        deleted = getattr(deleted_bc, "value", deleted_bc)
 
         # ONE lazily-decoding reader per term, SHARED across all queries of
         # the batch: the per-query MaxScore/block-max passes below decide
-        # which blocks each query needs; a block decodes at most once per
-        # segment no matter how many queries touch its term. This is the
+        # which blocks each query needs; a block decodes at most once no
+        # matter how many queries touch its term. This is the
         # per-query early termination the reference's BMW gives its batch
         # loop (src/scoring/bmw.c:1477-1716), grafted onto a shared decode
         # cache so the batch amortization is kept too.
@@ -978,11 +991,8 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
             gdf = {t: int(static_df[t]) for t in per_term}
         else:
             gdf = {t: int(rows_[0]["gdf"]) for t, rows_ in per_term.items()}
-        blocks_total = sum(int(r["num_blocks"])
-                           for rows_ in per_term.values() for r in rows_)
-        readers = _readers_for(per_term, seg_id, block_size, codec,
-                               denom_norm, k1, deleted, counters,
-                               reader_cache)
+        readers = _readers_for(per_term, block_size, codec, denom_norm, k1,
+                               deleted, counters, reader_cache)
 
         out_q, out_id, out_sc = [], [], []
         for qi, qterms in enumerate(per_query):
@@ -996,8 +1006,7 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
                 continue
             uniq, scores, _counts = res
             if uniq.size > k:
-                # cut by ROUNDED score (mirrors search_index + the oracle)
-                sel = np.lexsort((uniq, -np.round(scores, round_to)))[:k]
+                sel = _top_k(uniq, scores, k, round_to)
                 uniq, scores = uniq[sel], scores[sel]
             out_q.append(np.full(uniq.size, qi, dtype=np.int32))
             out_id.append(uniq)
@@ -1019,11 +1028,12 @@ def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
                                  "doc_id": np.array([-1], dtype=np.int64),
                                  "raw_score": np.array([0.0])})
             out = pd.concat([out, sent], ignore_index=True) if len(out) else sent
-            out["segment_id"] = seg_id
+            out["segment_id"] = str(key[0])
             out["blocks_decoded"] = np.int64(counters["decoded"])
             out["blocks_predecoded"] = np.int64(
                 counters.get("predecoded", 0))
-            out["blocks_total"] = np.int64(blocks_total)
+            out["blocks_total"] = np.int64(sum(
+                int(r["num_blocks"]) for r in recs))
         return out
 
     return kernel

@@ -12,6 +12,17 @@ pyarrow and runs the SAME kernels in-process. Results are pinned
 identical to ``search_index`` / ``search_batch`` in tests and
 oracle-checked by the driver (``bm25_topk_served``).
 
+One pass per query. The kernels are segment-agnostic (a term's reader
+spans every shard row it is handed, each with its own doc range, and
+doc ids are unique across segments), so ``search`` and ``search_batch``
+hand ONE kernel call the fetched rows of every segment: one MaxScore
+pass whose blocks are ranked by bound across the whole index, one
+running kth, one top-k heap — the reference's single cross-segment BMW
+scan (reference src/scoring/bmw.c:1477-1716). A cold segment's
+blocks are never decoded once the running kth passes their bounds.
+Tombstones are one sorted id array (``delete.live_deletes``); decoded
+readers are cached per term and die with the term's cache entry.
+
 Cold path. Postings files are written (term, shard)-sorted in row groups
 of at most ``build.POSTINGS_ROW_GROUP_ROWS`` rows with ``term`` statistics
 in the footer. Per manifest snapshot a replica opens each touched file
@@ -28,7 +39,7 @@ and read their one group.
 This is the reference's own split grafted onto Spark: pg_textsearch
 builds segments with parallel workers but answers ``ORDER BY <@>``
 queries from shared_buffers on one backend
-(/root/reference/src/scoring/bmw.c:1477-1716) — build and serve are
+(reference src/scoring/bmw.c:1477-1716) — build and serve are
 separate concerns with shared storage.
 
 100 TB shape: one LocalSearcher per serving replica, all reading the
@@ -44,17 +55,16 @@ anything that composes with the rest of a pipeline.
 from __future__ import annotations
 
 import os
-from bisect import bisect_left
 from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
 
 from .build import DOCS_DIR, POSTINGS_DIR
-from .delete import DELETES_DIR, deletes_by_segment
+from .delete import DELETES_DIR, live_deletes
 from .manifest import MANIFEST_NAME, Manifest
-from .query import (_resolve_k, make_batch_kernel, make_segment_kernel,
-                    tokenize_batch)
+from .query import (_holds, _resolve_k, _segments_holding, make_batch_kernel,
+                    make_segment_kernel, tokenize_batch)
 from ..functions.tokenizer import tokenize_query
 
 _EMPTY = {"doc_id": "int64", "score": "float64"}
@@ -96,15 +106,6 @@ def _read_groups(path: str, md, rgs: list[int], columns=None):
     import pyarrow.parquet as pq
     with pq.ParquetFile(path, metadata=md) as pf:
         return pf.read_row_groups(rgs, columns=columns, use_threads=False)
-
-
-def _holds(vals, rng) -> bool:
-    """Whether sorted ``vals`` hold a value in the row-group range ``rng``
-    ((min, max), or None for a group without statistics)."""
-    if rng is None:
-        return True
-    j = bisect_left(vals, rng[0])
-    return j < len(vals) and vals[j] <= rng[1]
 
 
 def _row_dicts(tbl) -> list[dict]:
@@ -156,10 +157,10 @@ class LocalSearcher:
         # (term for postings, doc_id for docmaps) drive row-group pruning
         self._seg_files: dict[str, list[tuple]] = {}
         self._doc_files: dict[str, list[tuple]] = {}
-        # decoded-posting readers persist ACROSS queries (keyed
-        # (segment_id, term)); lifetime is tied to the term LRU and the
-        # tombstone snapshot — readers mask deletions at decode time, so
-        # any tombstone change drops them all
+        # decoded-posting readers persist ACROSS queries, one per term
+        # spanning all its segments; lifetime is tied to the term LRU and
+        # the tombstone snapshot — readers mask deletions at decode time,
+        # so any tombstone change drops them all
         self._readers: dict = {}
         self._tomb_key = None
         self._tomb = None
@@ -185,8 +186,8 @@ class LocalSearcher:
         key = (tuple(sorted(os.listdir(ddir)))
                if os.path.isdir(ddir) else (), self.manifest.updated_at)
         if key != self._tomb_key:
-            # deletes_by_segment needs only .path and .manifest
-            self._tomb = deletes_by_segment(self)
+            # live_deletes needs only .path and .manifest
+            self._tomb = live_deletes(self)
             self._tomb_key = key
             self._readers.clear()   # cached decodes masked old tombstones
         return self._tomb
@@ -219,11 +220,7 @@ class LocalSearcher:
             import pyarrow.compute as pc
             got: dict[str, list[dict]] = {}
             value_set = pa.array(missing, type=pa.string())
-            for s in self.manifest.segments:
-                tmin = getattr(s, "term_min", "")
-                tmax = getattr(s, "term_max", "")
-                if tmin and tmax and not _holds(missing, (tmin, tmax)):
-                    continue        # segment cannot contain any cold term
+            for s in _segments_holding(self.manifest.segments, missing):
                 for path, md, _, ranges in self._files_for(s.segment_id):
                     rgs = [i for i, r in enumerate(ranges)
                            if _holds(missing, r)]
@@ -249,21 +246,25 @@ class LocalSearcher:
         while len(self._terms) > self.cache_terms:
             old, _ = self._terms.popitem(last=False)
             self._gdf.pop(old, None)
-            for rk in [rk for rk in self._readers if rk[1] == old]:
-                del self._readers[rk]
+            self._readers.pop(old, None)
         return out, gdf
 
+    def _forget_evicted(self, terms) -> None:
+        """Drop the readers a kernel just built for terms the LRU already
+        evicted (a query or batch with more terms than ``cache_terms``),
+        so the reader cache never outgrows the term cache."""
+        for t in terms:
+            if t not in self._terms:
+                self._readers.pop(t, None)
+
     @staticmethod
-    def _by_segment(rows: dict[str, list[dict]]) -> dict[str, list[dict]]:
-        """Per-segment record lists, (term, shard)-sorted — the kernels'
-        list fast path (no pandas frame per segment per query)."""
-        by_seg: dict[str, list[dict]] = {}
-        for rws in rows.values():
-            for r in rws:
-                by_seg.setdefault(r["segment_id"], []).append(r)
-        for rs in by_seg.values():
-            rs.sort(key=lambda r: (r["term"], r["shard"]))
-        return by_seg
+    def _by_segment(rows: dict[str, list[dict]]) -> list[dict]:
+        """The kernels' ONE record list: every fetched row of every term,
+        across all segments, each term's rows in the (segment_id, shard)
+        order :meth:`_fetch` keeps (the kernels' list fast path — no
+        pandas frame per query). The name predates the single pass; the
+        benchmark's tracing hooks bind it."""
+        return [r for rws in rows.values() for r in rws]
 
     def resolve(self, results: pd.DataFrame,
                 cols: tuple[str, ...] = ("source_id",)) -> pd.DataFrame:
@@ -335,8 +336,11 @@ class LocalSearcher:
     def search(self, query: str, k: int | None | str = 10, mode: str = "or",
                round_to: int = 4) -> pd.DataFrame:
         """Top-k for one query; identical results, ordering and tie rules
-        to ``Bm25Index.search`` (pinned in tests/test_serve.py)."""
+        to ``Bm25Index.search`` (pinned in tests/test_serve.py). ONE kernel
+        call scores the rows of every segment. ``last_stats`` reports the
+        distinct segments whose rows reached it."""
         self.refresh()
+        self.last_stats = {"segments_visited": 0}   # also for early returns
         opts = self.manifest.opts
         k = _resolve_k(k, opts)
         qterms = tokenize_query(query, opts.text_config)
@@ -359,77 +363,29 @@ class LocalSearcher:
 
         rows, gdf = self._fetch(terms)
         tomb = self._tombstones()   # may clear self._readers — call first
-        # sequential per-segment loop with a RUNNING global kth threaded
-        # into MaxScore: once k docs are banked, later segments prune
-        # against the global bar (whole segments skip when their bounds
-        # fall short) — the reference's single cross-scan heap
-        state = {"kth": 0.0, "segments_skipped": 0}
+        recs = self._by_segment(rows)
+        self.last_stats = {
+            "segments_visited": len({r["segment_id"] for r in recs})}
         kernel = make_segment_kernel(
             qfreqs, self.manifest.total_docs, k, opts,
             max(self.manifest.avgdl, 1e-9), mode, phrase_occs,
             deleted_bc=tomb, static_df=gdf,
-            round_to=round_to, reader_cache=self._readers,
-            shared_topk=state)
-        ids_l, sc_l = [], []
-        n_banked = 0
-        n_visited = 0
-        # running top-k of banked scores: the global threshold needs only
-        # the k largest seen so far, not a re-partition of every banked
-        # segment's scores per iteration
-        run_top = np.empty(0, dtype=np.float64)
-        for seg_id, rs in self._by_segment(rows).items():
-            n_visited += 1
-            uniq, scores = kernel((seg_id,), rs)
-            if not uniq.size:
-                continue
-            ids_l.append(uniq)
-            sc_l.append(scores)
-            n_banked += uniq.size
-            if k is not None:
-                run_top = np.concatenate([run_top, scores])
-                if run_top.size > k:
-                    run_top = np.partition(
-                        run_top, run_top.size - k)[run_top.size - k:]
-                if n_banked >= k:
-                    state["kth"] = float(run_top.min())
-        # observability: how many term-bearing segments the seeded
-        # threshold skipped without decoding a block (SCALE.md evidence)
-        self.last_stats = {"segments_visited": n_visited,
-                           "segments_skipped": state["segments_skipped"]}
-        if not ids_l:
+            round_to=round_to, reader_cache=self._readers)
+        ids, sc = kernel((None,), recs)     # already cut to k
+        self._forget_evicted(rows)
+        if not ids.size:
             return _empty(_EMPTY)
-        ids = np.concatenate(ids_l)
-        sc = np.round(np.concatenate(sc_l), round_to)
+        sc = np.round(sc, round_to)
         order = np.lexsort((ids, -sc))      # score DESC, doc_id ASC
-        if k is not None:
-            order = order[:k]
         return pd.DataFrame({"doc_id": ids[order], "score": sc[order]})
 
     def search_batch(self, queries: list[str], k: int = 10,
-                     round_to: int = 4,
-                     per_query_seeding: bool = False) -> pd.DataFrame:
+                     round_to: int = 4) -> pd.DataFrame:
         """Batched disjunctive top-k; same shared-decode-cache kernel as
-        the Spark ``search_batch`` (a block decodes at most once per
-        segment across the whole batch), same output and ordering.
-
-        ``per_query_seeding=True`` flips to a query-major loop of
-        :meth:`search` calls — each query then gets cross-segment
-        threshold seeding, and decode sharing is preserved by the
-        persistent reader cache. Same results either way (pinned in
-        tests); pick by regime: segment-major wins when per-segment
-        posting volume is small (fixed costs amortize across the
-        batch), query-major wins when hot terms are large enough that
-        seeded pruning pays (measured at 2 M docs: ~140 -> ~66 ms/q)."""
-        if per_query_seeding:
-            parts = []
-            for qi, q in enumerate(queries):
-                out = self.search(q, k=k, round_to=round_to)
-                if len(out):
-                    out.insert(0, "query_id", np.int32(qi))
-                    parts.append(out)
-            if not parts:
-                return _empty(_EMPTY_BATCH)
-            return pd.concat(parts, ignore_index=True)
+        the Spark ``search_batch`` (a block decodes at most once across
+        the whole batch), same output and ordering. ONE kernel call scores
+        every query over the rows of every segment; each query gets its
+        own MaxScore pass and running kth."""
         self.refresh()
         opts = self.manifest.opts
         per_query, all_terms = tokenize_batch(queries, opts)
@@ -441,21 +397,11 @@ class LocalSearcher:
             per_query, self.manifest.total_docs, k, opts,
             max(self.manifest.avgdl, 1e-9), round_to=round_to,
             deleted_bc=tomb, static_df=gdf, reader_cache=self._readers)
-        parts = [kernel((seg_id,), rs)
-                 for seg_id, rs in self._by_segment(rows).items()]
-        parts = [p for p in parts if p[0].size]
-        if not parts:
+        qid, ids, sc = kernel((None,), self._by_segment(rows))
+        self._forget_evicted(rows)
+        if not qid.size:
             return _empty(_EMPTY_BATCH)
-        qid = np.concatenate([p[0] for p in parts])
-        ids = np.concatenate([p[1] for p in parts])
-        sc = np.round(np.concatenate([p[2] for p in parts]), round_to)
+        sc = np.round(sc, round_to)
         o = np.lexsort((ids, -sc, qid))     # qid ASC, score DESC, doc ASC
-        qid, ids, sc = qid[o], ids[o], sc[o]
-        # per-query head(k): rank within each qid run of the sorted arrays
-        starts = np.zeros(qid.size, dtype=np.int64)
-        starts[np.r_[0, np.flatnonzero(np.diff(qid)) + 1]] = 1
-        run_start = np.maximum.accumulate(
-            np.where(starts == 1, np.arange(qid.size), 0))
-        keep = (np.arange(qid.size) - run_start) < k
-        return pd.DataFrame({"query_id": qid[keep], "doc_id": ids[keep],
-                             "score": sc[keep]})
+        return pd.DataFrame({"query_id": qid[o], "doc_id": ids[o],
+                             "score": sc[o]})

@@ -136,30 +136,6 @@ def test_serve_resolve_matches_spark(spark, corpus, tmp_path):
     assert (r["source_id"] == r["doc_id"]).all()
 
 
-def test_threshold_seeding_skips_and_preserves_results(idx):
-    from pg_textsearch_spark.index.query import make_segment_kernel
-    srv = idx.serving()
-    q = "quick brown fox"
-    want = serve_rows(srv.search(q, k=10))
-    # a seeded kth above any achievable score makes every segment return
-    # empty WITHOUT decoding (the whole-segment skip in _run_maxscore)
-    opts = srv.manifest.opts
-    from pg_textsearch_spark.functions.tokenizer import tokenize_query
-    qf = {t: float(f) for t, f in tokenize_query(q, opts.text_config)}
-    rows, gdf = srv._fetch(list(qf))
-    kernel = make_segment_kernel(
-        qf, srv.manifest.total_docs, 10, opts,
-        max(srv.manifest.avgdl, 1e-9), "or", None,
-        static_df=gdf, shared_topk={"kth": 1e9})
-    for seg_id, rs in srv._by_segment(rows).items():
-        uniq, _ = kernel((seg_id,), rs)
-        assert uniq.size == 0
-    # and the real sequential loop (which seeds with the RUNNING kth)
-    # still returns exactly the Spark path's results
-    assert serve_rows(srv.search(q, k=10)) == want == \
-        spark_rows(idx.search(q, k=10))
-
-
 def test_ann_serving_matches_spark(spark, tmp_path):
     from pg_textsearch_spark.operators import similarity
     embs = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
@@ -188,29 +164,103 @@ def test_ann_serving_matches_spark(spark, tmp_path):
     assert v["vec_id"].tolist() == one["vec_id"].tolist()
 
 
-def test_seeded_threshold_skips_cold_segments(spark, tmp_path):
-    # doc-range segments (no reorder): docs 1-100 are term-heavy, docs
-    # 301-400 mention the term once in long docs — once segment 1 banks
-    # k docs, later segments' bounds fall short and skip entirely
-    rows = [(i, "rare " * 8 + "filler") for i in range(1, 101)]
-    rows += [(i, "rare " + "pad " * 40) for i in range(301, 401)]
+def test_cold_segment_never_decoded(spark, tmp_path, monkeypatch):
+    # identity layout, two doc-range segments: docs 1-1000 hold the term
+    # 8 times in short docs (8 blocks), docs 1001-2000 once in long docs.
+    # The first-term batch of 4 hot blocks banks k docs; the next batch
+    # may take only blocks that can still beat the kth — the other 4 hot
+    # ones, never a cold block (a doubling batch of 8 would reach them)
+    rows = [(i, "rare " * 8 + "filler") for i in range(1, 1001)]
+    rows += [(i, "rare " + "pad " * 40) for i in range(1001, 2001)]
     docs = spark.createDataFrame(rows, "id long, content string")
     idx = Bm25Index.build(spark, docs, "content", str(tmp_path / "idx"),
                           id_col="id",
                           opts=Bm25Options(text_config="simple"),
-                          num_segments=4)
+                          num_segments=2)
+    cold = {s.segment_id for s in idx.manifest.segments
+            if s.min_doc_id > 1000}
+    assert cold and len(idx.manifest.segments) == 2
+    want = spark_rows(idx.search("rare", k=10))
+
+    from pg_textsearch_spark.index import query
+    seen = []
+
+    def spy(fn):
+        def wrapped(r, *a, **kw):
+            seen.append(r["segment_id"])
+            return fn(r, *a, **kw)
+        return wrapped
+    monkeypatch.setattr(query, "decode_row", spy(query.decode_row))
+    monkeypatch.setattr(query, "decode_row_blocks",
+                        spy(query.decode_row_blocks))
     srv = idx.serving()
     got = srv.search("rare", k=10)
-    assert srv.last_stats["segments_skipped"] >= 1, srv.last_stats
-    assert serve_rows(got) == spark_rows(idx.search("rare", k=10))
+    assert srv.last_stats["segments_visited"] == 2
+    assert seen and not cold & set(seen), seen
+    assert serve_rows(got) == want
 
 
-def test_serve_batch_per_query_seeding_identical(idx):
+def test_serve_batch_equals_per_query_search(idx):
     srv = idx.serving()
     qs = ["quick brown", "lazy dog river", "stone", "nosuchterm", "fox ember"]
-    a = srv.search_batch(qs, k=5)
-    b = srv.search_batch(qs, k=5, per_query_seeding=True)
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))
+    got = srv.search_batch(qs, k=5)
+    for qi, q in enumerate(qs):
+        one = got[got["query_id"] == qi]
+        assert serve_rows(one) == serve_rows(srv.search(q, k=5)), q
+
+
+def _tie_text(i):
+    # every 50th doc is the same short text: its score ties across all
+    # segments, so a k-boundary cut falls inside the tie
+    return "tie marker words" if i % 50 == 0 else _text(i)
+
+
+def test_single_pass_matches_spark_on_many_segments(spark, tmp_path):
+    docs = spark.createDataFrame([(i, _tie_text(i)) for i in range(1, 601)],
+                                 "id long, content string")
+    idx = Bm25Index.build(spark, docs, "content", str(tmp_path / "idx"),
+                          id_col="id", opts=OPTS, num_segments=6)
+    segs = idx.manifest.segments
+    assert len(segs) >= 5
+    victims = [8, 50, 250, 333, 512]
+    idx.delete(victims)
+    hit = {s.segment_id for s in segs for v in victims
+           if s.min_doc_id <= v <= s.max_doc_id}
+    assert len(hit) >= 2
+    srv = idx.serving()
+    tie = spark_rows(idx.search("tie", k="all"))
+    assert len(tie) > 5 and tie[4][1] == tie[5][1]    # tie at k = 5
+    assert len({s.segment_id for s in segs for d, _ in tie
+                if s.min_doc_id <= d <= s.max_doc_id}) >= 5
+    for q in QUERIES + ["tie", "tie quick"]:
+        for k in (5, 10):
+            assert serve_rows(srv.search(q, k=k)) == \
+                spark_rows(idx.search(q, k=k)), (q, k)
+    for q in ["quick brown fox", "lazy dog", "tie marker"]:
+        for mode in ("and", "phrase"):
+            assert serve_rows(srv.search(q, k=5, mode=mode)) == \
+                spark_rows(idx.search(q, k=5, mode=mode)), (q, mode)
+    qs = QUERIES + ["tie", "marker words quick"]
+    got = srv.search_batch(qs, k=5)
+    want = search_batch(idx, qs, k=5).toPandas()
+    assert got.reset_index(drop=True).equals(want.reset_index(drop=True))
+    assert not set(victims) & set(got["doc_id"].tolist())
+
+
+def test_reader_cache_follows_term_lru(idx):
+    srv = LocalSearcher(idx.path, cache_terms=8)
+    ever = set()
+    stream = QUERIES + ["river stone cloud", "jumps ember fox", "doc 17",
+                        "lazy doc 250", "brown 3 4 5 6 7 8 9 10 11"]
+    for q in stream:
+        srv.search(q, k=5)
+        ever |= set(srv._readers)
+        srv.search_batch([q, "dog", "1 2 12 13 14 15 16 17 18"], k=3)
+        ever |= set(srv._readers)
+        assert len(srv._terms) <= 8 and len(srv._readers) <= 8
+        assert set(srv._readers) <= set(srv._terms)
+    evicted = ever - set(srv._terms)
+    assert evicted and not evicted & set(srv._readers)
 
 
 def test_partitioned_serving_matches_spark(spark, tmp_path):
