@@ -164,12 +164,65 @@ def test_ann_serving_matches_spark(spark, tmp_path):
     assert v["vec_id"].tolist() == one["vec_id"].tolist()
 
 
-def test_cold_segment_never_decoded(spark, tmp_path, monkeypatch):
+def _block_spy(monkeypatch):
+    """Record (segment_id, blocks) for every postings decode."""
+    from pg_textsearch_spark.index import query
+    seen = []
+
+    def whole(fn):
+        def wrapped(r, *a, **kw):
+            seen.append((r["segment_id"], int(r["num_blocks"])))
+            return fn(r, *a, **kw)
+        return wrapped
+
+    def some(fn):
+        def wrapped(r, local, *a, **kw):
+            seen.append((r["segment_id"], len(local)))
+            return fn(r, local, *a, **kw)
+        return wrapped
+    monkeypatch.setattr(query, "decode_row", whole(query.decode_row))
+    monkeypatch.setattr(query, "decode_row_blocks",
+                        some(query.decode_row_blocks))
+    return seen
+
+
+def test_threshold_seeding_skips_and_preserves_results(spark, tmp_path,
+                                                        monkeypatch):
+    # identity layout, four doc-range segments: the term's tf climbs
+    # from 1 to 8 with the doc id, so the best blocks sit at the end.
+    # The kth banked by the first batch bounds every later batch: a
+    # top-10 decodes only the blocks that can still beat it, yet
+    # returns exactly the Spark path's (and the full ranking's) top 10
+    rows = [(i, "rare " * (1 + (i - 1) // 250) + "filler")
+            for i in range(1, 2001)]
+    docs = spark.createDataFrame(rows, "id long, content string")
+    idx = Bm25Index.build(spark, docs, "content", str(tmp_path / "idx"),
+                          id_col="id",
+                          opts=Bm25Options(text_config="simple"),
+                          num_segments=4)
+    seen = _block_spy(monkeypatch)
+    top = serve_rows(idx.serving().search("rare", k=10))
+    top_blocks = sum(n for _, n in seen)
+    del seen[:]
+    full = serve_rows(idx.serving().search("rare", k="all"))
+    full_blocks = sum(n for _, n in seen)
+    assert 0 < top_blocks < full_blocks, (top_blocks, full_blocks)
+    assert len(full) == 2000
+    assert top == full[:10] == spark_rows(idx.search("rare", k=10))
+    assert full == spark_rows(idx.search("rare", k="all"))
+    srv = idx.serving()
+    for q in ("rare filler", "filler"):
+        assert serve_rows(srv.search(q, k=10)) == \
+            spark_rows(idx.search(q, k=10)), q
+
+
+def test_seeded_threshold_skips_cold_segments(spark, tmp_path, monkeypatch):
     # identity layout, two doc-range segments: docs 1-1000 hold the term
     # 8 times in short docs (8 blocks), docs 1001-2000 once in long docs.
-    # The first-term batch of 4 hot blocks banks k docs; the next batch
-    # may take only blocks that can still beat the kth — the other 4 hot
-    # ones, never a cold block (a doubling batch of 8 would reach them)
+    # The first-term batch of 4 hot blocks banks k docs and seeds the
+    # kth; the next batch may take only blocks that can still beat it —
+    # the other 4 hot ones, never a cold block (a doubling batch of 8
+    # would reach them)
     rows = [(i, "rare " * 8 + "filler") for i in range(1, 1001)]
     rows += [(i, "rare " + "pad " * 40) for i in range(1001, 2001)]
     docs = spark.createDataFrame(rows, "id long, content string")
@@ -182,21 +235,11 @@ def test_cold_segment_never_decoded(spark, tmp_path, monkeypatch):
     assert cold and len(idx.manifest.segments) == 2
     want = spark_rows(idx.search("rare", k=10))
 
-    from pg_textsearch_spark.index import query
-    seen = []
-
-    def spy(fn):
-        def wrapped(r, *a, **kw):
-            seen.append(r["segment_id"])
-            return fn(r, *a, **kw)
-        return wrapped
-    monkeypatch.setattr(query, "decode_row", spy(query.decode_row))
-    monkeypatch.setattr(query, "decode_row_blocks",
-                        spy(query.decode_row_blocks))
+    seen = _block_spy(monkeypatch)
     srv = idx.serving()
     got = srv.search("rare", k=10)
     assert srv.last_stats["segments_visited"] == 2
-    assert seen and not cold & set(seen), seen
+    assert seen and not cold & {s for s, _ in seen}, seen
     assert serve_rows(got) == want
 
 
