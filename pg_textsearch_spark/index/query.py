@@ -30,7 +30,14 @@ re-expressed term-at-a-time for a columnar numpy kernel:
   block-level seek, segment.decode_row_blocks);
 - once the summed bounds of all remaining terms cannot beat the kth
   partial score, the non-essential phase decodes only candidate-bearing
-  blocks (``_candidate_contrib``).
+  blocks (``_TermReader.candidate_contrib``).
+
+Decoded postings live in one flat store per term (``_TermReader``):
+``ids`` / ``contrib`` arrays addressed by per-block posting offsets, a
+decoded-block mask and an alive mask for tombstoned postings. Fetching
+blocks is one gather, and the non-essential lookup is one pass over all
+of a term's rows, so the kernel's numpy call count does not grow with
+the number of segments or blocks a term spans.
 
 All thresholds carry an ``eps = 10^-round_to`` slack so pruning can never
 disturb ties at the ROUNDED-score boundary the public API (and the DuckDB
@@ -126,6 +133,19 @@ def _prune_segments_by_term(index: "Bm25Index",
                                        sorted(set(terms)))]
 
 
+# the positions sidecar: the biggest columns of a positions-enabled
+# index, read by phrase queries only
+POSITION_COLS = ("pos_counts_bin", "pos_deltas_bin", "skip_pos_off")
+
+
+def _drop_positions(postings: DataFrame) -> DataFrame:
+    """``postings`` without the positions sidecar. applyInPandas ships
+    every input column to the kernel (no automatic pruning through the
+    Arrow boundary), so every non-phrase Spark query drops it here."""
+    cols = [c for c in POSITION_COLS if c in postings.columns]
+    return postings.drop(*cols) if cols else postings
+
+
 def _read_postings(index: "Bm25Index", terms: list[str]) -> DataFrame:
     if not index.manifest.segments:
         raise ValueError("index has no segments")
@@ -167,28 +187,38 @@ def term_stats(index: "Bm25Index", terms: list[str]) -> DataFrame:
 
 
 class _TermReader:
-    """Lazily-decoding posting reader for ONE term.
+    """Lazily-decoding posting reader for ONE term, over a flat store.
 
     Wraps the term's shard rows — one segment's on the Spark path, every
     segment's on the serving path; each row carries its own doc range, so
-    nothing here depends on which segment a row came from. Skip metadata
-    gives a per-block score upper bound; blocks decode on demand (random
-    access via the skip entries' byte offsets) into a per-block cache of
-    ``(doc_ids, unit_contrib)`` where ``unit_contrib =
-    tf*(k1+1)/(tf+denom)`` is the query-weight-INDEPENDENT BM25 factor —
-    so in a batched query one decode serves every query that touches the
-    term (the reference's shared posting cursor across a batch,
-    re-expressed as a decode cache). Tombstoned docs are masked at decode
-    time, before anything is cached, so thresholds only ever see alive
-    docs. ``counters['decoded']`` counts each block's decode exactly once
-    regardless of how many queries consume it.
+    nothing here depends on which segment a row came from. Blocks are
+    numbered flat across the rows (row by row, in row order). Skip
+    metadata gives a per-block score upper bound; blocks decode on demand
+    (random access via the skip entries' byte offsets) into ONE pair of
+    flat arrays, ``ids`` and ``contrib``, laid out like the postings
+    themselves: block ``f`` owns ``[poff[f], poff[f + 1])``, where
+    ``poff`` is the cumsum of ``skip_doc_count``. ``contrib`` holds
+    ``tf*(k1+1)/(tf+denom)``, the query-weight-INDEPENDENT BM25 factor, so
+    in a batched query one decode serves every query that touches the term
+    (the reference's shared posting cursor across a batch, re-expressed as
+    a decode cache). A per-block ``dec`` mask says which blocks are filled.
+    Tombstoned postings are marked in an ``alive`` mask at decode time
+    (one binary search per decoded chunk; the mask exists only once a dead
+    posting was seen) and never leave :meth:`get`, so thresholds only ever
+    see alive docs. ``counters['decoded']`` counts each block's decode
+    exactly once regardless of how many queries consume it.
+
+    Every method makes a fixed number of numpy calls whatever the block
+    or row count, apart from one decode call per shard row that still has
+    a block to decode. The store is allocated at the first decode, so a
+    reader that never decodes costs only its bound arrays.
     """
 
     __slots__ = ("rows", "block_size", "codec", "denom_norm", "k1",
-                 "deleted", "counters", "frow", "fbnd", "flast",
-                 "row_start", "row_nblocks", "n_blocks", "max_unit_bound",
-                 "bound_order", "sorted_bnd", "rmin", "rlast", "_cache",
-                 "_pos", "_all")
+                 "deleted", "counters", "fbnd", "flast", "row_start",
+                 "n_blocks", "max_unit_bound", "rmin", "_order",
+                 "frow", "poff", "ids", "contrib", "dec", "n_dec", "alive",
+                 "_pos")
 
     def __init__(self, rows: list[dict], block_size: int, codec: str,
                  denom_norm: np.ndarray, k1: float,
@@ -200,117 +230,156 @@ class _TermReader:
         self.k1 = k1
         self.deleted = deleted
         self.counters = counters
-        frow, fbnd, flast, nblocks = [], [], [], []
-        for ri, r in enumerate(rows):
+        fbnd, flast, nblocks = [], [], []
+        for r in rows:
             mn = np.asarray(r["skip_min_norm"], dtype=np.int64)
             mt = np.asarray(r["skip_max_tf"], dtype=np.float64)
             # block upper bound of the unit contribution (reference bound
             # inputs block_max_tf + min fieldnorm, src/scoring/bmw.c:382-396)
             fbnd.append((mt * (k1 + 1.0)) / (mt + denom_norm[mn]))
-            frow.append(np.full(mn.size, ri, dtype=np.int64))
             flast.append(np.asarray(r["skip_last_doc_id"], dtype=np.int64))
             nblocks.append(mn.size)
-        self.frow = np.concatenate(frow)
-        self.fbnd = np.concatenate(fbnd)
-        self.flast = np.concatenate(flast)
-        self.row_nblocks = nblocks
+        one = len(rows) == 1
+        self.fbnd = fbnd[0] if one else np.concatenate(fbnd)
+        self.flast = flast[0] if one else np.concatenate(flast)
         self.row_start = np.r_[np.int64(0),
                                np.cumsum(np.asarray(nblocks, dtype=np.int64))]
         self.n_blocks = int(self.fbnd.size)
         self.max_unit_bound = float(self.fbnd.max())
-        # bound-descending decode order; ties broken by flat index ASC so
-        # progressive decode is deterministic
-        self.bound_order = np.lexsort((np.arange(self.n_blocks), -self.fbnd))
-        self.sorted_bnd = self.fbnd[self.bound_order]   # non-increasing
         self.rmin = np.asarray([int(r["min_doc_id"]) for r in rows],
                                dtype=np.int64)
-        self.rlast = np.asarray([int(r["last_doc_id"]) for r in rows],
-                                dtype=np.int64)
-        self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._order = None
+        self.dec = None             # the flat store: see _alloc
+        self.n_dec = 0
+        self.alive = None
         self._pos: dict[tuple[int, int], tuple | None] = {}
-        self._all: tuple[np.ndarray, np.ndarray] | None = None
+
+    def bound_order(self) -> tuple[np.ndarray, np.ndarray]:
+        """(flat block indices in bound-descending decode order, their
+        bounds): ties broken by flat index ASC so progressive decode is
+        deterministic. Built on first use — only a query's first term in
+        MaxScore order needs it."""
+        if self._order is None:
+            bo = np.lexsort((np.arange(self.n_blocks), -self.fbnd))
+            self._order = (bo, self.fbnd[bo])        # bounds non-increasing
+        return self._order
+
+    def _alloc(self) -> None:
+        """Allocate the flat store: posting offsets per block, the
+        decoded-block mask and the (unfilled) id / contribution arrays."""
+        rows = self.rows
+        if len(rows) == 1:
+            cnts = np.asarray(rows[0]["skip_doc_count"], dtype=np.int64)
+            self.frow = None                # every block is row 0's
+        else:
+            cnts = np.concatenate([np.asarray(r["skip_doc_count"],
+                                              dtype=np.int64) for r in rows])
+            self.frow = np.repeat(np.arange(len(rows), dtype=np.int64),
+                                  np.diff(self.row_start))
+        self.poff = np.zeros(self.n_blocks + 1, dtype=np.int64)
+        np.cumsum(cnts, out=self.poff[1:])
+        n = int(self.poff[-1])
+        self.ids = np.empty(n, dtype=np.int64)
+        self.contrib = np.empty(n, dtype=np.float64)
+        self.dec = np.zeros(self.n_blocks, dtype=bool)
+
+    def _postings(self, sel: np.ndarray):
+        """Store positions of the postings of the SORTED unique flat blocks
+        ``sel``: a slice for a contiguous run, else one repeat + arange
+        gather over the block offsets."""
+        poff = self.poff
+        a, b = int(sel[0]), int(sel[-1])
+        if b - a + 1 == sel.size:
+            return slice(int(poff[a]), int(poff[b + 1]))
+        starts = poff[sel]
+        cnt = poff[sel + 1] - starts
+        ends = np.cumsum(cnt)
+        return np.repeat(starts - (ends - cnt), cnt) + np.arange(ends[-1])
 
     def _ensure(self, flat_idx: np.ndarray) -> None:
-        missing = np.asarray([f for f in flat_idx if int(f) not in self._cache],
-                             dtype=np.int64)
+        if self.dec is None:
+            self._alloc()
+        elif self.n_dec == self.n_blocks:
+            return
+        missing = flat_idx[~self.dec[flat_idx]]
         if missing.size == 0:
             return
         missing = np.unique(missing)
-        rows_of = self.frow[missing]
-        for ri in np.unique(rows_of):
-            sel = missing[rows_of == ri]
+        # one chunk per shard row holding a missing block
+        if self.frow is None:
+            rows_of, cuts = None, [0, missing.size]
+        else:
+            rows_of = self.frow[missing]
+            cuts = [0, *(np.flatnonzero(np.diff(rows_of)) + 1).tolist(),
+                    missing.size]
+        dele = self.deleted
+        if dele is not None and not dele.size:
+            dele = None
+        for c0, c1 in zip(cuts, cuts[1:]):
+            sel = missing[c0:c1]
+            ri = 0 if rows_of is None else int(rows_of[c0])
             base = int(self.row_start[ri])
-            local = sel - base
-            r = self.rows[int(ri)]
-            nb = int(self.row_nblocks[int(ri)])
-            cnts_all = np.asarray(r["skip_doc_count"], dtype=np.int64)
-            requested = int(local.size)
-            full_row = local.size == nb
-            if not full_row and local.size > max(4, nb // 16):
+            end = int(self.row_start[ri + 1])
+            nb = end - base
+            r = self.rows[ri]
+            requested = todo = int(sel.size)
+            whole = requested == nb or requested > max(4, nb // 16)
+            if whole and requested < nb:
                 # bound-ordered selection is SCATTERED, so the per-run
                 # random-access decode degenerates to one tiny varbyte
                 # call per block (~fixed numpy cost each — measured 15x
                 # slower than one full-stream pass on a 2 M-doc hot
                 # term). Past ~1/16 of a row, decode the WHOLE stream
-                # once and cache every still-missing block; below that,
+                # once and fill every still-missing block; below that,
                 # true block random access keeps its pruning win.
                 # `blocks_decoded` keeps counting only the blocks the
                 # PRUNING LOGIC asked for (round-comparable evidence);
                 # the opportunistic extras land in `blocks_predecoded`.
-                local = np.asarray(
-                    [b_ for b_ in range(nb)
-                     if (base + b_) not in self._cache], dtype=np.int64)
-                sel = local + base
-                full_row = True
-            if full_row:
+                todo = nb - int(np.count_nonzero(self.dec[base:end]))
+            if whole:
                 ids, tfs, norms = decode_row(r, self.block_size, self.codec)
-                pstart = np.cumsum(np.r_[np.int64(0), cnts_all])
-                starts = pstart[local]
-                ends = pstart[local + 1]
+                at = slice(int(self.poff[base]), int(self.poff[end]))
+                self.dec[base:end] = True
             else:
-                ids, tfs, norms = decode_row_blocks(r, local, self.codec)
-                c = cnts_all[local]
-                ends = np.cumsum(c)
-                starts = ends - c
+                ids, tfs, norms = decode_row_blocks(r, sel - base, self.codec)
+                at = self._postings(sel)
+                self.dec[sel] = True
+            self.n_dec += todo
             self.counters["decoded"] += requested
-            extra_blocks = int(local.size) - requested
-            if extra_blocks:
+            if todo > requested:
                 self.counters["predecoded"] = (
-                    self.counters.get("predecoded", 0) + extra_blocks)
+                    self.counters.get("predecoded", 0) + todo - requested)
             tfd = tfs.astype(np.float64)
-            contrib = (tfd * (self.k1 + 1.0)) / (tfd + self.denom_norm[norms])
-            dele = self.deleted
-            for f, s, e in zip(sel, starts, ends):
-                bi, bc = ids[s:e], contrib[s:e]
-                if dele is not None and dele.size and bi.size:
-                    pos = np.searchsorted(dele, bi)
-                    pos[pos >= dele.size] = dele.size - 1
-                    alive = dele[pos] != bi
-                    if not alive.all():
-                        bi, bc = bi[alive], bc[alive]
-                self._cache[int(f)] = (bi, bc)
+            self.contrib[at] = ((tfd * (self.k1 + 1.0))
+                                / (tfd + self.denom_norm[norms]))
+            self.ids[at] = ids
+            if dele is not None and ids.size:
+                pos = np.minimum(np.searchsorted(dele, ids), dele.size - 1)
+                alive = dele[pos] != ids
+                if self.alive is not None:
+                    self.alive[at] = alive
+                elif not alive.all():
+                    self.alive = np.ones(self.ids.size, dtype=bool)
+                    self.alive[at] = alive
 
     def get(self, flat_idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, unit_contribs) concatenated over the given flat block
-        indices (decoded on demand, cache-reused). A full-blocks request
-        memoizes its concatenation — warm hot queries, and/phrase mode
-        and the batch path all re-request every block per query."""
-        flat_idx = np.asarray(flat_idx)
-        full = flat_idx.size == self.n_blocks
-        if full and self._all is not None:
-            return self._all
-        self._ensure(flat_idx)
-        parts = [self._cache[int(f)] for f in np.sort(flat_idx)]
-        parts = [p for p in parts if p[0].size]
-        if not parts:
+        """(doc_ids, unit_contribs) of the alive postings of the given
+        UNIQUE flat block indices, in flat block order (decoded on demand,
+        store-reused). A request for every block returns the store itself
+        when no posting is dead — callers must not write to the result."""
+        flat_idx = np.asarray(flat_idx, dtype=np.int64)
+        if not flat_idx.size:
             e = np.empty(0, dtype=np.int64)
-            out = (e, e.astype(np.float64))
-        else:
-            out = (np.concatenate([p[0] for p in parts]),
-                   np.concatenate([p[1] for p in parts]))
-        if full:
-            self._all = out
-        return out
+            return e, e.astype(np.float64)
+        self._ensure(flat_idx)
+        at = (slice(None) if flat_idx.size == self.n_blocks
+              else self._postings(np.sort(flat_idx)))
+        ids, cs = self.ids[at], self.contrib[at]
+        if self.alive is not None:
+            keep = self.alive[at]
+            if not keep.all():
+                return ids[keep], cs[keep]
+        return ids, cs
 
     def pos_blocks(self, ri: int, blocks: np.ndarray):
         """Raw (block_doc_ids, positions_lists) per LOCAL block of shard
@@ -342,27 +411,31 @@ class _TermReader:
         """Non-essential-phase lookup: unit contribution of each candidate
         doc (0 where absent), decoding ONLY candidate-bearing blocks
         (binary search over skip last_doc_ids — the reference's block seek,
-        src/segment/scan.c:448-500). ``cand_ids`` must be sorted."""
-        out = np.zeros(cand_ids.size, dtype=np.float64)
-        if cand_ids.size == 0:
-            return out
-        # each row's candidates are one slice of the sorted candidates;
-        # rows (of any segment) without a candidate cost nothing
-        los = np.searchsorted(cand_ids, self.rmin, side="left")
-        his = np.searchsorted(cand_ids, self.rlast, side="right")
-        for ri in np.flatnonzero(his > los):
-            sel = cand_ids[los[ri]:his[ri]]
-            lasts = self.flast[self.row_start[ri]:self.row_start[ri + 1]]
-            blocks = np.unique(np.searchsorted(lasts, sel, side="left"))
-            ids, cs = self.get(blocks + self.row_start[ri])
-            if not ids.size:
-                continue
-            # within one shard row blocks are doc-id-sorted, so ids is sorted
-            pos = np.searchsorted(ids, sel)
-            hit = pos < ids.size
-            hit[hit] = ids[pos[hit]] == sel[hit]
-            out[los[ri]:his[ri]][hit] += cs[pos[hit]]
-        return out
+        src/segment/scan.c:448-500). ``cand_ids`` must be sorted and
+        unique. One pass over every row: one search finds the bearing
+        blocks, one :meth:`get` fetches them, one search and one
+        ``bincount`` (adding in flat block order, so row order) credit the
+        candidates."""
+        c = cand_ids.size
+        if c == 0:
+            return np.zeros(0, dtype=np.float64)
+        # candidates at or below each block's last id: a block bears one
+        # when that count passes the previous block's, or for a row's
+        # first block the count below the row's min_doc_id — the count
+        # restarts per row, since rows' doc ranges may overlap (a merged
+        # segment can span an unmerged one)
+        upto = np.searchsorted(cand_ids, self.flast, side="right")
+        before = np.empty_like(upto)
+        before[1:] = upto[:-1]
+        before[self.row_start[:-1]] = np.searchsorted(cand_ids, self.rmin,
+                                                      side="left")
+        blocks = np.flatnonzero(upto > before)
+        if not blocks.size:
+            return np.zeros(c, dtype=np.float64)
+        ids, cs = self.get(blocks)
+        pos = np.minimum(np.searchsorted(cand_ids, ids), c - 1)
+        hit = cand_ids[pos] == ids
+        return np.bincount(pos[hit], weights=cs[hit], minlength=c)
 
 
 def _readers_for(per_term: dict, block_size: int, codec: str,
@@ -456,11 +529,11 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
         w = weights[t]
         other = total_bound - bounds[t]
         if i == 0:
-            bo = rd.bound_order
+            bo, sorted_bnd = rd.bound_order()
             # best total each block in decode order can still reach:
             # non-increasing, so the blocks that can beat a kth are a
             # prefix of ``bo``
-            reach = w * rd.sorted_bnd + other
+            reach = w * sorted_bnd + other
             limit = bo.size
             ids_p, sc_p = [], []
             n_seen, pos, batch = 0, 0, 4
@@ -864,15 +937,7 @@ def _search_local(index: "Bm25Index", query: str, k, mode: str,
                                  df_accum=df_accum)
     postings = _read_postings(index, terms)
     if phrase_occs is None:
-        # applyInPandas ships every input column to the kernel (no
-        # automatic pruning through the Arrow boundary) — drop the
-        # positions sidecar unless this is a phrase query. On a
-        # positions-enabled index the sidecar is the biggest column.
-        pos_cols = [c for c in ("pos_counts_bin", "pos_deltas_bin",
-                                "skip_pos_off")
-                    if c in postings.columns]
-        if pos_cols:
-            postings = postings.drop(*pos_cols)
+        postings = _drop_positions(postings)
     out_schema = "doc_id long, raw_score double, n_terms int"
     if profile:
         out_schema += (", segment_id string, blocks_decoded long, "
@@ -1072,10 +1137,7 @@ def _search_batch_local(index: "Bm25Index", queries: list[str], k: int,
         out_schema += (", segment_id string, blocks_decoded long, "
                        "blocks_predecoded long, blocks_total long")
 
-    postings = _read_postings(index, sorted(all_terms))
-    postings = postings.drop(*[c for c in ("pos_counts_bin",
-                                           "pos_deltas_bin")
-                               if c in postings.columns])
+    postings = _drop_positions(_read_postings(index, sorted(all_terms)))
     from pyspark.sql import Window
     rows = postings.withColumn(
         "gdf", F.sum("doc_freq").over(Window.partitionBy("term")))

@@ -128,6 +128,21 @@ def test_serve_resolve_matches_spark(spark, corpus, tmp_path):
     want = idx.resolve(idx.search("quick brown fox", k=10)).toPandas()
     assert list(zip(got["source_id"], got["score"])) == \
         list(zip(want["source_id"], want["score"]))
+    assert _dtypes(got) == _dtypes(want) == {
+        "doc_id": "int64", "score": "float64", "source_id": "int64"}
+    # a batch frame resolves to (query_id ASC, score DESC, source_id ASC)
+    qs = ["quick brown", "lazy dog", "nosuchterm", "stone"]
+    rb = srv.resolve(srv.search_batch(qs, k=10))
+    assert _dtypes(rb) == {"query_id": "int32", "doc_id": "int64",
+                           "score": "float64", "source_id": "int64"}
+    assert rb.equals(rb.sort_values(
+        ["query_id", "score", "source_id"], ascending=[True, False, True],
+        kind="mergesort").reset_index(drop=True))
+    for qi, q in enumerate(qs):
+        one = srv.resolve(srv.search(q, k=10))
+        sub = rb[rb["query_id"] == qi].drop(columns="query_id")
+        assert sub.reset_index(drop=True).equals(one) if len(one) \
+            else sub.empty, q
     # identity-layout build: source_id == doc_id synthesized
     plain = Bm25Index.build(spark, corpus, "content", str(tmp_path / "idx2"),
                             id_col="id", opts=OPTS, num_segments=2)
@@ -241,6 +256,46 @@ def test_seeded_threshold_skips_cold_segments(spark, tmp_path, monkeypatch):
     assert srv.last_stats["segments_visited"] == 2
     assert seen and not cold & {s for s, _ in seen}, seen
     assert serve_rows(got) == want
+
+
+def _dtypes(frame) -> dict:
+    return {c: str(t) for c, t in frame.dtypes.items()}
+
+
+def test_serve_frame_dtypes(idx):
+    srv = idx.serving()
+    one = {"doc_id": "int64", "score": "float64"}
+    batch = {"query_id": "int32", "doc_id": "int64", "score": "float64"}
+    for q in ("quick brown", "nosuchterm", ""):
+        assert _dtypes(srv.search(q, k=5)) == one, q
+    assert _dtypes(srv.search("quick lazy", k=5, mode="and")) == one
+    for qs in (["quick", "lazy dog"], ["nosuchterm"], [""]):
+        assert _dtypes(srv.search_batch(qs, k=5)) == batch, qs
+    # identity-layout build: source_id is the doc id itself
+    r = srv.resolve(srv.search("quick brown", k=5))
+    assert _dtypes(r) == dict(one, source_id="int64")
+    assert _dtypes(srv.resolve(srv.search("nosuchterm", k=5))) == one
+
+
+def test_batch_search_ships_no_positions_column(idx):
+    # a positions index: no non-phrase Spark query ships the positions
+    # sidecar through applyInPandas (column pruning keeps it out of the
+    # scan), and batch search still equals serving
+    from pg_textsearch_spark.index.query import (
+        POSITION_COLS, _search_batch_local, _search_local)
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+    qs = ["quick brown", "lazy dog river", "ember"]
+    phrase, _ = _search_local(idx, "quick brown", 5, "phrase", 4, False)
+    assert all(c in plan(phrase) for c in POSITION_COLS)
+    single, _ = _search_local(idx, "quick brown", 5, "or", 4, False)
+    for p in (plan(single), plan(_search_batch_local(idx, qs, 5, 4, False))):
+        assert "pos_counts_bin" not in p and "pos_deltas_bin" not in p \
+            and "skip_pos_off" not in p
+    got = idx.serving().search_batch(qs, k=5)
+    want = search_batch(idx, qs, k=5).toPandas()
+    assert got.equals(want)
 
 
 def test_serve_batch_equals_per_query_search(idx):
