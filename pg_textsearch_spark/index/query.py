@@ -9,11 +9,16 @@ Lifecycle (SURVEY.md §3.1 Spark equivalent):
     dictionary, Q10), aggregate global doc_freq per term (Q2),
  3. driver computes IDFs from the manifest's global stats (Q3: N, avgdl are
     global across all segments — segment layout never changes scores),
- 4. stage 2: per-segment scoring kernel (applyInPandas over segment_id):
-    numpy-vectorized term-at-a-time accumulation with block-max pruning
-    (Q4/Q5/Q11/Q12) and a local top-k (Q6),
- 5. stage 3: global ``orderBy(score desc, doc_id asc).limit(k)`` —
-    Spark's TakeOrderedAndProject is the final top-k heap merge.
+ 4. stage 2: ONE scoring kernel (:func:`make_kernel`) per segment
+    (applyInPandas over segment_id). A single query and a batch are the
+    same thing to it: a list of :class:`QueryPlan` (terms with query
+    frequencies, mode, phrase offsets), a single query being a batch of
+    one. It runs numpy-vectorized term-at-a-time accumulation with
+    block-max pruning (Q4/Q5/Q11/Q12) and a top-k per query (Q6),
+ 5. stage 3: global top-k merge — ``orderBy(score desc, doc_id
+    asc).limit(k)`` (TakeOrderedAndProject) for ``search_index``; for
+    ``search_batch`` the per-segment top-ks meet in one partition, sorted,
+    and each query keeps its first k.
 
 Block-max pruning (the reference's BMW, src/scoring/bmw.c:469-642 single
 -term and 1477-1716 multi-term, safe-skip bound at bmw.c:1526-1571),
@@ -41,20 +46,24 @@ the number of segments or blocks a term spans.
 
 All thresholds carry an ``eps = 10^-round_to`` slack so pruning can never
 disturb ties at the ROUNDED-score boundary the public API (and the DuckDB
-oracle) orders by. Per-kernel ``blocks_decoded``/``blocks_total`` counters
-(the reference's log_bmw_stats analogue) are exposed via ``profile=True``
-/ :func:`search_profiled`.
+oracle) orders by. Per-segment ``blocks_decoded``/``blocks_total``
+counters (the reference's log_bmw_stats analogue) come back through
+:func:`search_profiled` / :func:`search_batch_profiled`: with
+``profile=True`` the one Spark adapter (:func:`_spark_kernel`) appends a
+sentinel row (``query_id = -1``) carrying its kernel's counters, and one
+collector splits the sentinels back out.
 
-The kernels are segment-agnostic: a term's reader spans every shard row
-it is handed, whatever segment each row came from, and accumulation is
-keyed by doc id (unique across segments). The Spark path hands each
-kernel one segment's rows (``applyInPandas`` over ``segment_id``, for
-parallelism); the serving path (index/serve.py) hands ONE kernel call the
-rows of every segment, so one MaxScore pass and one top-k heap span the
-whole index — the reference's single cross-segment BMW scan
+The kernel takes row dicts and gives arrays out, ``(query_id, doc_id,
+raw_score)``; it is segment-agnostic: a term's reader spans every shard
+row it is handed, whatever segment each row came from, and accumulation
+is keyed by doc id (unique across segments). The Spark path hands it one
+segment's rows (``applyInPandas`` over ``segment_id``, for parallelism);
+the serving path (index/serve.py) hands ONE kernel call the rows of every
+segment, so one MaxScore pass and one top-k heap span the whole index —
+the reference's single cross-segment BMW scan
 (src/scoring/bmw.c:1477-1716).
 
-Tombstones reach the kernels as ONE sorted id array: the ids that fall
+Tombstones reach the kernel as ONE sorted id array: the ids that fall
 in some live segment's [min_doc_id, max_doc_id] (delete.live_deletes),
 shipped once per executor as a Spark broadcast on the Spark path
 (delete.tombstone_broadcast). Readers mask dead ids right after block
@@ -66,11 +75,11 @@ from __future__ import annotations
 import math
 from bisect import bisect_left
 from collections import OrderedDict
-from typing import TYPE_CHECKING
+from typing import TYPE_CHECKING, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..config import Bm25Options
@@ -466,13 +475,16 @@ def _readers_for(per_term: dict, block_size: int, codec: str,
 
 
 def _accumulate(id_parts: list, sc_parts: list):
-    all_ids = np.concatenate(id_parts)
-    all_sc = np.concatenate(sc_parts)
-    uniq, inv = np.unique(all_ids, return_inverse=True)
-    # bincount adds in input order, like np.add.at, at a fraction of its cost
-    scores = np.bincount(inv, weights=all_sc, minlength=uniq.size)
-    counts = np.bincount(inv, minlength=uniq.size)
-    return uniq, scores, counts
+    """Sum postings per doc: (sorted unique ids, their scores, each
+    posting's index into them). ``bincount`` adds in input order, like
+    ``np.add.at`` at a fraction of its cost, so passing a running
+    ``(uniq, scores)`` as the first part and one more term's postings as
+    the second gives ``0 + s_1 + ... + s_n`` in term order: bit-identical
+    to summing every part at once, without re-sorting earlier terms."""
+    uniq, inv = np.unique(np.concatenate(id_parts), return_inverse=True)
+    scores = np.bincount(inv, weights=np.concatenate(sc_parts),
+                         minlength=uniq.size)
+    return uniq, scores, inv
 
 
 def _top_k(uniq: np.ndarray, scores: np.ndarray, k: int,
@@ -506,22 +518,22 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
       ``searchsorted`` over the bound-sorted blocks), so a batch cannot
       overshoot into blocks — or whole segments — that cannot matter;
     - each LATER essential term decodes only blocks whose bound plus the
-      other terms' bounds can beat the kth accumulated partial score;
+      other terms' bounds can beat the kth accumulated partial score, and
+      is merged into the running (uniq, scores) by :func:`_accumulate`;
     - once the remaining terms' summed bounds cannot beat the kth partial
       score, the non-essential phase decodes only candidate-bearing blocks.
 
     All thresholds carry ``eps`` slack so pruning never disturbs ties at
-    the ROUNDED-score boundary. Returns (uniq_ids, scores, partial_counts)
-    or None when no postings survive. Scores of docs below the final kth
-    may be partial (standard MaxScore invariant — an under-scored doc is
-    provably below the threshold that skipped its blocks), so the caller
-    cuts at k.
+    the ROUNDED-score boundary. Returns (uniq_ids, scores) or None when no
+    postings survive. Scores of docs below the final kth may be partial
+    (standard MaxScore invariant — an under-scored doc is provably below
+    the threshold that skipped its blocks), so the caller cuts at k.
     """
     bounds = {t: weights[t] * r.max_unit_bound for t, r in readers.items()}
     order = sorted(readers, key=lambda t: (-bounds[t], t))
     total_bound = sum(bounds.values())
-    id_parts, sc_parts = [], []
-    uniq = scores = counts = None
+    uniq = np.empty(0, dtype=np.int64)
+    scores = np.empty(0, dtype=np.float64)
     nonessential_from = len(order)
     remaining = total_bound
     for i, t in enumerate(order):
@@ -561,20 +573,12 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
                     limit = min(limit, int(np.searchsorted(
                         -reach, eps - float(run_top.min()), side="right")))
             if ids_p:
-                id_parts.append(np.concatenate(ids_p))
-                sc_parts.append(np.concatenate(sc_p))
+                uniq, scores, _ = _accumulate(ids_p, sc_p)
         else:
-            if id_parts:
-                u, sc, cn = _accumulate(id_parts, sc_parts)
-            else:  # earlier terms contributed nothing (e.g. all tombstoned)
-                u = np.empty(0, dtype=np.int64)
-                sc = np.empty(0, dtype=np.float64)
-                cn = np.empty(0, dtype=np.int64)
             kth = None
-            if k is not None and sc.size >= k:
-                kth = np.partition(sc, sc.size - k)[sc.size - k]
+            if k is not None and scores.size >= k:
+                kth = np.partition(scores, scores.size - k)[scores.size - k]
             if kth is not None and remaining < kth - eps:
-                uniq, scores, counts = u, sc, cn
                 nonessential_from = i
                 break
             if kth is None:
@@ -584,13 +588,11 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
             if sel.size:
                 ids, cs = rd.get(sel)
                 if ids.size:
-                    id_parts.append(ids)
-                    sc_parts.append(cs * w)
+                    uniq, scores, _ = _accumulate([uniq, ids],
+                                                  [scores, cs * w])
         remaining -= bounds[t]
-    if not id_parts or not any(a.size for a in id_parts):
+    if not uniq.size:
         return None
-    if uniq is None:
-        uniq, scores, counts = _accumulate(id_parts, sc_parts)
     if nonessential_from < len(order):
         # reached only with >= k accumulated docs (the break above)
         rem_terms = order[nonessential_from:]
@@ -601,239 +603,77 @@ def _run_maxscore(readers: dict[str, _TermReader], weights: dict[str, float],
         for t in rem_terms:
             add = readers[t].candidate_contrib(cand_ids)
             scores[cand_mask] += add * weights[t]
-        # counts are partial under pruning; only used for 'and' (no prune)
-    return uniq, scores, counts
+    return uniq, scores
 
 
-class _DictMergeParam:
-    """AccumulatorParam merging per-task {term: global_df} dicts — every
-    segment kernel reports the SAME global value per term (the window
-    aggregate), so updates are idempotent under task retries."""
-    def zero(self, value):
-        return {}
+def _exhaustive(readers: dict[str, _TermReader], weights: dict[str, float],
+                plan: "QueryPlan"):
+    """Every alive posting of every term, accumulated once: ``or`` with
+    ``k="all"``, ``and`` (a doc must hold every query term) and
+    ``phrase`` (the query's terms at the plan's offsets). Decoded through
+    the same readers, so the serving path's cross-query cache covers these
+    modes too. Returns (uniq_ids, scores) or None when no posting
+    survives."""
+    order = sorted(readers, key=lambda t: (-weights[t]
+                                           * readers[t].max_unit_bound, t))
+    got = {t: readers[t].get(np.arange(readers[t].n_blocks, dtype=np.int64))
+           for t in order}
+    uniq, scores, inv = _accumulate([ids for ids, _ in got.values()],
+                                    [cs * weights[t]
+                                     for t, (_, cs) in got.items()])
+    if not uniq.size:
+        return None
+    if plan.mode == "and":
+        keep = np.bincount(inv, minlength=uniq.size) >= len(plan.terms)
+    elif plan.mode == "phrase":
+        # AND-style doc-id intersection FIRST; only then decode positions,
+        # and only the blocks candidates can live in
+        pterms = sorted({t for t, _ in plan.occs})
+        cand = None
+        for t in pterms:
+            ids_t = got[t][0] if t in got else np.empty(0, dtype=np.int64)
+            cand = ids_t if cand is None else \
+                cand[np.isin(cand, ids_t, assume_unique=True)]
+            if not cand.size:
+                return None
+        keep = _phrase_filter(
+            uniq, {t: _positions_for(readers[t], cand) for t in pterms},
+            plan.occs)
+    else:
+        return uniq, scores
+    return uniq[keep], scores[keep]
 
-    def addInPlace(self, a, b):
-        a.update(b)
-        return a
 
-
-def make_segment_kernel(qfreqs: dict[str, float], n_docs: int,
-                        k: int | None, opts: Bm25Options, avgdl: float,
-                        mode: str, phrase_occs: list[tuple[str, int]] | None,
-                        deleted_bc=None, static_df: dict[str, int] | None = None,
-                        round_to: int = 4, profile: bool = False,
-                        df_accum=None, reader_cache: dict | None = None):
-    """Build the scoring kernel. ``qfreqs``: term -> query frequency.
-
-    ``kernel(key, rows)`` scores whatever shard rows it is handed: one
-    segment's pandas frame under ``applyInPandas`` over ``segment_id``
-    (``key[0]`` is then the segment id, used only for profile columns),
-    or the serving path's one list of row dicts spanning every segment.
-
-    IDFs are computed inside the kernel from the ``gdf`` column (global
-    doc_freq attached by a window aggregate in the same job — Q2 without a
-    separate driver round-trip; every segment sees the same global value,
-    so scores are independent of segment layout, SURVEY.md §1.4).
-
-    ``deleted_bc``: the sorted tombstoned ids (delete.live_deletes), as a
-    Spark broadcast or a plain array, or None. Dead postings are masked
-    right after block decode — before any accumulation or pruning — so
-    thresholds only ever see alive docs (the reference checks its alive
-    bitset per hit the same way). Stats stay dead-inclusive until a merge,
-    matching reference VACUUM semantics (SURVEY.md §2.2 M4)."""
-    k1, b = float(opts.k1), float(opts.b)
-    # norm code -> BM25 tf-denominator length component, precomputed once
-    norm_len = DECODE_TABLE.astype(np.float64)
-    denom_norm = k1 * (1.0 - b + b * norm_len / avgdl)  # indexed by norm code
-    # rounding slack: the public ordering rounds scores to `round_to`
-    # decimals, so pruning must only drop docs strictly below the kth
-    # ROUNDED score; eps covers a full ulp of the rounded digit
-    eps = 10.0 ** (-round_to)
-    n_qterms = len(qfreqs)
-
-    out_cols = ["doc_id", "raw_score", "n_terms"]
-    if profile:
-        out_cols += ["segment_id", "blocks_decoded", "blocks_predecoded",
-                     "blocks_total", "pos_blocks_decoded",
-                     "pos_blocks_total"]
-
-    def kernel(key, pdf):
-        spec = {"doc_id": "int64", "raw_score": "float64", "n_terms": "int32",
-                "segment_id": "object", "blocks_decoded": "int64",
-                "blocks_predecoded": "int64",
-                "blocks_total": "int64", "pos_blocks_decoded": "int64",
-                "pos_blocks_total": "int64"}
-        # Spark hands an Arrow-decoded pandas frame; the serving path
-        # (index/serve.py) hands a list of row dicts AND gets back raw
-        # (doc_ids, scores) arrays — frame construction on BOTH sides was
-        # the bulk of warm point-query latency
-        as_arrays = not isinstance(pdf, pd.DataFrame)
-        if as_arrays and profile:
-            raise ValueError("array fast path does not carry profile "
-                             "columns — use the DataFrame path")
-        empty_pair = (np.empty(0, dtype=np.int64),
-                      np.empty(0, dtype=np.float64))
-
-        def empty_frame(cols=None):
-            return pd.DataFrame({c: pd.Series(dtype=spec[c])
-                                 for c in (cols or out_cols)})
-
-        if len(pdf) == 0:
-            return empty_pair if as_arrays else empty_frame()
-        recs = pdf if as_arrays else \
-            pdf.sort_values(["term", "shard"]).to_dict("records")
-        per_term: dict[str, list[dict]] = {}
-        for rec in recs:
-            per_term.setdefault(rec["term"], []).append(rec)
-
-        deleted = getattr(deleted_bc, "value", deleted_bc)
-
-        # global IDF: from the driver's df cache when warm (static), else
-        # from the window-attached gdf column (identical on every shard
-        # row of a term, across all segments)
-        if static_df is not None:
-            weights = {t: qfreqs[t] * idf(n_docs, static_df[t])
-                       for t in per_term}
-        else:
-            gdfs = {t: int(rows_[0]["gdf"]) for t, rows_ in per_term.items()}
-            weights = {t: qfreqs[t] * idf(n_docs, g) for t, g in gdfs.items()}
-            if df_accum is not None:
-                # ride the global dfs back to the driver with this job's
-                # task results — the NEXT query on these terms skips the
-                # window without a separate cache-warming job
-                df_accum.add(gdfs)
-
-        counters = {"decoded": 0, "pos_decoded": 0}
-
-        def finish(out: pd.DataFrame) -> pd.DataFrame:
-            """Attach profile columns; ALWAYS emit one sentinel row
-            (n_terms = -1) per segment so counters survive even when every
-            doc was pruned (search_profiled splits sentinels back out)."""
-            if not profile:
-                return out
-            pos_blocks_total = 0
-            if phrase_occs is not None:
-                pterms = {t for t, _ in phrase_occs}
-                pos_blocks_total = sum(
-                    int(r["num_blocks"]) for t in pterms
-                    for r in per_term.get(t, ())
-                    if r.get("pos_counts_bin") is not None)
-            sent = pd.DataFrame({"doc_id": np.array([-1], dtype=np.int64),
-                                 "raw_score": np.array([0.0]),
-                                 "n_terms": np.array([-1], dtype=np.int32)})
-            out = pd.concat([out, sent], ignore_index=True) if len(out) else sent
-            out["segment_id"] = str(key[0])
-            out["blocks_decoded"] = np.int64(counters["decoded"])
-            out["blocks_predecoded"] = np.int64(
-                counters.get("predecoded", 0))
-            out["blocks_total"] = np.int64(sum(
-                int(r["num_blocks"]) for r in recs))
-            out["pos_blocks_decoded"] = np.int64(counters["pos_decoded"])
-            out["pos_blocks_total"] = np.int64(pos_blocks_total)
-            return out[out_cols]
-
-        def decode_positions_for(t, cand, readers):
-            """Positions for term t restricted to candidate docs: decode
-            ONLY the sidecar blocks that can contain a candidate (VERDICT
-            round-3 #5 — phrase queries no longer decode every positions
-            list of every term). Raw block decodes go through the reader's
-            positions cache, so warm phrase queries on the serving path
-            skip the sidecar entirely."""
-            ids_l: list[np.ndarray] = []
-            pls: list[np.ndarray] = []
-            rd = readers[t]
-            for ri, r in enumerate(rd.rows):
-                sub = cand[(cand >= int(r["min_doc_id"]))
-                           & (cand <= int(r["last_doc_id"]))]
-                if not sub.size:
-                    continue
-                skip_last = np.asarray(r["skip_last_doc_id"], dtype=np.int64)
-                blocks = np.unique(np.searchsorted(skip_last, sub,
-                                                   side="left"))
-                blocks = blocks[blocks < skip_last.size]
-                if not blocks.size:
-                    continue
-                for got in rd.pos_blocks(ri, blocks):
-                    if got is None:
-                        break
-                    bids, plists = got
-                    hit = np.isin(bids, sub, assume_unique=False)
-                    if hit.any():
-                        ids_l.append(bids[hit])
-                        pls.extend(p for p, h in zip(plists, hit) if h)
-            if not ids_l:
-                return np.empty(0, dtype=np.int64), []
-            return np.concatenate(ids_l), pls
-
-        can_prune = mode == "or" and k is not None and phrase_occs is None
-
-        if can_prune:
-            # MaxScore + block-max over lazily-decoded readers (shared
-            # implementation with search_batch — _run_maxscore)
-            readers = _readers_for(per_term, opts.block_size, opts.codec,
-                                   denom_norm, k1, deleted, counters,
-                                   reader_cache)
-            res = _run_maxscore(readers, weights, k, eps)
-            if res is None:
-                return empty_pair if as_arrays else finish(
-                    empty_frame(["doc_id", "raw_score", "n_terms"]))
-            uniq, scores, counts = res
-        else:
-            # exhaustive accumulation ('and' needs exact per-doc term
-            # counts; phrase needs the positions of every matched doc) —
-            # decoded through the same readers so the serving path's
-            # cross-query cache covers and/phrase too
-            readers = _readers_for(per_term, opts.block_size, opts.codec,
-                                   denom_norm, k1, deleted, counters,
-                                   reader_cache)
-            bounds = {t: weights[t] * readers[t].max_unit_bound
-                      for t in per_term}
-            order = sorted(per_term, key=lambda t: (-bounds[t], t))
-            id_parts, sc_parts = [], []
-            decoded_ids: dict[str, np.ndarray] = {}
-            for t in order:
-                rd = readers[t]
-                ids, cs = rd.get(np.arange(rd.n_blocks, dtype=np.int64))
-                id_parts.append(ids)
-                sc_parts.append(cs * weights[t])
-                decoded_ids[t] = ids
-            if not id_parts or not any(a.size for a in id_parts):
-                return empty_pair if as_arrays else finish(
-                    empty_frame(["doc_id", "raw_score", "n_terms"]))
-            uniq, scores, counts = _accumulate(id_parts, sc_parts)
-            keep = np.ones(uniq.size, dtype=bool)
-            if mode == "and":
-                keep = counts >= n_qterms
-            elif mode == "phrase":
-                # AND-style doc-id intersection FIRST; only then decode
-                # positions, and only the blocks candidates can live in
-                nodoc = np.empty(0, dtype=np.int64)
-                cand = None
-                for t in sorted({t_ for t_, _ in phrase_occs}):
-                    ids_t = decoded_ids.get(t, nodoc)
-                    cand = ids_t if cand is None else \
-                        cand[np.isin(cand, ids_t, assume_unique=True)]
-                    if not cand.size:
-                        break
-                if cand is None or not cand.size:
-                    keep = np.zeros(uniq.size, dtype=bool)
-                else:
-                    pos_parts = {t: decode_positions_for(t, cand, readers)
-                                 for t in {t_ for t_, _ in phrase_occs}}
-                    keep = _phrase_filter(uniq, pos_parts, phrase_occs)
-            uniq, scores, counts = uniq[keep], scores[keep], counts[keep]
-
-        if k is not None and uniq.size > k:
-            sel = _top_k(uniq, scores, k, round_to)
-            uniq, scores, counts = uniq[sel], scores[sel], counts[sel]
-        if as_arrays:
-            return uniq.astype(np.int64), scores
-        out = pd.DataFrame({"doc_id": uniq.astype(np.int64),
-                            "raw_score": scores,
-                            "n_terms": counts.astype(np.int32)})
-        return finish(out)
-
-    return kernel
+def _positions_for(rd: _TermReader, cand: np.ndarray):
+    """(doc_ids, positions lists) of term reader ``rd`` restricted to the
+    candidate docs: decode ONLY the sidecar blocks that can contain a
+    candidate (VERDICT round-3 #5 — phrase queries no longer decode every
+    positions list of every term). Raw block decodes go through the
+    reader's positions cache, so warm phrase queries on the serving path
+    skip the sidecar entirely."""
+    ids_l: list[np.ndarray] = []
+    pls: list[np.ndarray] = []
+    for ri, r in enumerate(rd.rows):
+        sub = cand[(cand >= int(r["min_doc_id"]))
+                   & (cand <= int(r["last_doc_id"]))]
+        if not sub.size:
+            continue
+        skip_last = np.asarray(r["skip_last_doc_id"], dtype=np.int64)
+        blocks = np.unique(np.searchsorted(skip_last, sub, side="left"))
+        blocks = blocks[blocks < skip_last.size]
+        if not blocks.size:
+            continue
+        for got in rd.pos_blocks(ri, blocks):
+            if got is None:
+                break
+            bids, plists = got
+            hit = np.isin(bids, sub, assume_unique=False)
+            if hit.any():
+                ids_l.append(bids[hit])
+                pls.extend(p for p, h in zip(plists, hit) if h)
+    if not ids_l:
+        return np.empty(0, dtype=np.int64), []
+    return np.concatenate(ids_l), pls
 
 
 def _phrase_filter(uniq_ids: np.ndarray,
@@ -870,49 +710,131 @@ def _phrase_filter(uniq_ids: np.ndarray,
     return keep
 
 
-def _search_local(index: "Bm25Index", query: str, k, mode: str,
-                  round_to: int, profile: bool):
-    """Shared plan builder: returns the per-segment kernel output DataFrame
-    (doc_id, raw_score, n_terms[, profile cols]) plus the resolved k."""
-    spark = index.spark
-    opts = index.manifest.opts
-    k = _resolve_k(k, opts)
-    qterms = tokenize_query(query, opts.text_config)
-    if not qterms:
-        return None, k
+class QueryPlan(NamedTuple):
+    """One query as the kernel scores it: its (term, query frequency)
+    list, its mode (``or`` / ``and`` / ``phrase``) and, in phrase mode,
+    every query occurrence as (term, offset from the first occurrence)."""
+    terms: list[tuple[str, float]]
+    mode: str
+    occs: list[tuple[str, int]] | None = None
 
-    terms = [t for t, _ in qterms]
-    n = index.manifest.total_docs
-    avgdl = max(index.manifest.avgdl, 1e-9)
-    qfreqs = {t: float(qf) for t, qf in qterms}
 
-    phrase_occs = None
-    if mode == "phrase":
-        if not opts.store_positions:
-            raise ValueError("phrase search requires an index built with store_positions=True")
-        from ..spark_utils import _tokenize_with_positions
-        ts, _, _, ps = _tokenize_with_positions(query, opts.text_config, {})
-        occ = [(t, p) for t, pl in zip(ts, ps) for p in pl]
-        base = min(p for _, p in occ)
-        phrase_occs = [(t, p - base) for t, p in occ]
+def plan_query(query: str, mode: str, opts: Bm25Options,
+               tokenize=tokenize_query) -> QueryPlan:
+    """Tokenize ``query`` into its :class:`QueryPlan`. ``tokenize`` is the
+    (term, qfreq) tokenizer; the serving path passes its own module-level
+    name, so a wrapper installed there sees the call."""
+    terms = [(t, float(f)) for t, f in tokenize(query, opts.text_config)]
+    if mode != "phrase" or not terms:
+        return QueryPlan(terms, mode)
+    if not opts.store_positions:
+        raise ValueError("phrase search requires an index built with "
+                         "store_positions=True")
+    from ..spark_utils import _tokenize_with_positions
+    ts, _, _, ps = _tokenize_with_positions(query, opts.text_config, {})
+    occ = [(t, p) for t, pl in zip(ts, ps) for p in pl]
+    base = min(p for _, p in occ)
+    return QueryPlan(terms, mode, [(t, p - base) for t, p in occ])
 
-    from .delete import tombstone_broadcast
-    deleted_bc = tombstone_broadcast(index)
 
-    # per-manifest-version doc_freq cache: df only changes on
-    # build/append/merge, so repeated query terms skip the aggregation
-    # entirely — warm queries are ONE no-window job
+def make_kernel(plans: list[QueryPlan], n_docs: int, k: int | None,
+                opts: Bm25Options, avgdl: float, deleted_bc=None,
+                round_to: int = 4, reader_cache: dict | None = None):
+    """Build THE scoring kernel for a batch of query plans; a single query
+    is a batch of one.
+
+    ``kernel(gdf, recs, counters=None)`` scores the shard rows ``recs``
+    (row dicts, each term's rows in (segment, shard) order): one
+    segment's on the Spark path (:func:`_spark_kernel`), every segment's
+    on the serving path. ``gdf`` maps each term to its global doc_freq, so
+    IDFs — and scores — do not depend on segment layout (SURVEY.md §1.4).
+    It returns ``(query_id, doc_id, raw_score)`` arrays, each query cut to
+    its own top ``k``. ONE lazily-decoding reader per term is shared by
+    every plan, so a block decodes at most once however many queries
+    touch its term (the reference's shared posting cursor across a
+    batch); each plan then runs its own pass: MaxScore + block-max
+    (:func:`_run_maxscore`) for a pruned ``or``, :func:`_exhaustive` for
+    ``and``, ``phrase`` and ``k="all"``. ``counters`` receives the
+    readers' block counters (``decoded``, ``predecoded``,
+    ``pos_decoded``).
+
+    ``deleted_bc``: the sorted tombstoned ids (delete.live_deletes), as a
+    Spark broadcast or a plain array, or None. Dead postings are masked
+    right after block decode — before any accumulation or pruning — so
+    thresholds only ever see alive docs (the reference checks its alive
+    bitset per hit the same way). Stats stay dead-inclusive until a merge,
+    matching reference VACUUM semantics (SURVEY.md §2.2 M4)."""
+    k1, b = float(opts.k1), float(opts.b)
+    # norm code -> BM25 tf-denominator length component, precomputed once
+    denom_norm = k1 * (1.0 - b + b * DECODE_TABLE.astype(np.float64) / avgdl)
+    # rounding slack: the public ordering rounds scores to `round_to`
+    # decimals, so pruning must only drop docs strictly below the kth
+    # ROUNDED score; eps covers a full ulp of the rounded digit
+    eps = 10.0 ** (-round_to)
+
+    def kernel(gdf: dict[str, int], recs: list[dict], counters=None):
+        per_term: dict[str, list[dict]] = {}
+        for rec in recs:
+            per_term.setdefault(rec["term"], []).append(rec)
+        readers = _readers_for(
+            per_term, opts.block_size, opts.codec, denom_norm, k1,
+            getattr(deleted_bc, "value", deleted_bc),
+            {"decoded": 0} if counters is None else counters, reader_cache)
+        out = []
+        for qi, plan in enumerate(plans):
+            weights = {t: qf * idf(n_docs, gdf[t]) for t, qf in plan.terms
+                       if t in readers}
+            if not weights:
+                continue
+            sub = {t: readers[t] for t in weights}
+            if plan.mode == "or" and k is not None:
+                res = _run_maxscore(sub, weights, k, eps)
+            else:
+                res = _exhaustive(sub, weights, plan)
+            if res is None:
+                continue
+            uniq, scores = res
+            if k is not None and uniq.size > k:
+                sel = _top_k(uniq, scores, k, round_to)
+                uniq, scores = uniq[sel], scores[sel]
+            out.append((np.full(uniq.size, qi, dtype=np.int32), uniq,
+                        scores))
+        if not out:
+            return (np.empty(0, np.int32), np.empty(0, np.int64),
+                    np.empty(0, np.float64))
+        return tuple(np.concatenate(c) for c in zip(*out))
+
+    return kernel
+
+
+class _DictMergeParam:
+    """AccumulatorParam merging per-task {term: global_df} dicts — every
+    segment kernel reports the SAME global value per term (the window
+    aggregate), so updates are idempotent under task retries."""
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        a.update(b)
+        return a
+
+
+def _global_dfs(index: "Bm25Index", terms: list[str]):
+    """(static_df, df_accum) for a query's terms. The driver caches global
+    doc_freqs per manifest version (df only changes on build / append /
+    merge): when every term is cached, ``static_df`` holds them and the
+    query is ONE no-window job. Otherwise a window aggregate attaches them
+    to the postings rows and the kernel calls ride them back through
+    ``df_accum`` with the same job's task results; the cache drains such
+    accumulators from queries the user has since executed, without ever
+    running a second job."""
     ver = (index.manifest.updated_at, len(index.manifest.segments))
     cached = getattr(index, "_df_cache", None)
     if cached is None or cached[0] != ver:
         index._df_cache = (ver, {})
     dfc = index._df_cache[1]
-    # drain accumulators from earlier cold queries the USER has since
-    # executed: their kernels shipped {term: global_df} back with the task
-    # results, so the cache fills without ever running a second job
-    pending = getattr(index, "_pending_df_accums", [])
     still = []
-    for pver, pterms, acc in pending:
+    for pver, pterms, acc in getattr(index, "_pending_df_accums", []):
         if pver != ver:
             continue        # stale manifest version — discard
         vals = acc.value
@@ -922,50 +844,94 @@ def _search_local(index: "Bm25Index", query: str, k, mode: str,
                 dfc.setdefault(t, 0)   # queried but absent from postings
         else:
             still.append((pver, pterms, acc))   # not executed yet
-    index._pending_df_accums = still[-8:]
-
-    static_df = None
-    df_accum = None
     if all(t in dfc for t in terms):
-        static_df = {t: dfc[t] for t in terms}
-    else:
-        df_accum = spark.sparkContext.accumulator({}, _DictMergeParam())
+        index._pending_df_accums = still[-8:]
+        return {t: dfc[t] for t in terms}, None
+    acc = index.spark.sparkContext.accumulator({}, _DictMergeParam())
+    index._pending_df_accums = (still + [(ver, list(terms), acc)])[-8:]
+    return None, acc
 
-    kernel = make_segment_kernel(qfreqs, n, k, opts, avgdl, mode, phrase_occs,
-                                 deleted_bc=deleted_bc, static_df=static_df,
-                                 round_to=round_to, profile=profile,
-                                 df_accum=df_accum)
+
+_PROFILE_COLS = ("blocks_decoded", "blocks_predecoded", "blocks_total",
+                 "pos_blocks_decoded", "pos_blocks_total")
+
+
+def _spark_kernel(kernel, plans: list[QueryPlan], static_df, df_accum,
+                  profile: bool):
+    """The kernel as an ``applyInPandas`` function over one segment's
+    postings frame: rows sorted (term, shard) into records, global
+    doc_freqs from ``static_df`` or the frame's window-attached ``gdf``
+    column (added to ``df_accum``), arrays out as one frame
+    ``(query_id, doc_id, raw_score)``. With ``profile`` every call also
+    emits one sentinel row (query_id -1) and the block counters as
+    columns, so counters survive even when every doc was pruned."""
+    pterms = {t for p in plans for t, _ in (p.occs or ())}
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        recs = pdf.sort_values(["term", "shard"]).to_dict("records")
+        gdf = static_df
+        if gdf is None:
+            gdf = {r["term"]: int(r["gdf"]) for r in recs}
+            if df_accum is not None:
+                df_accum.add(gdf)
+        counters = {"decoded": 0, "pos_decoded": 0}
+        qid, ids, sc = kernel(gdf, recs, counters)
+        if not profile:
+            return pd.DataFrame({"query_id": qid, "doc_id": ids,
+                                 "raw_score": sc})
+        out = pd.DataFrame({"query_id": np.append(qid, np.int32(-1)),
+                            "doc_id": np.append(ids, np.int64(-1)),
+                            "raw_score": np.append(sc, 0.0)})
+        out["blocks_decoded"] = counters["decoded"]
+        out["blocks_predecoded"] = counters.get("predecoded", 0)
+        out["blocks_total"] = sum(int(r["num_blocks"]) for r in recs)
+        out["pos_blocks_decoded"] = counters["pos_decoded"]
+        out["pos_blocks_total"] = sum(
+            int(r["num_blocks"]) for r in recs
+            if r["term"] in pterms and r.get("pos_counts_bin") is not None)
+        return out
+
+    return run
+
+
+def _search_plan(index: "Bm25Index", queries: list[str], mode: str,
+                 k: int | None, round_to: int, profile: bool):
+    """THE Spark plan of a batch of queries (a single query is a batch of
+    one): a term-pruned postings scan, one kernel call per segment
+    (``applyInPandas`` over ``segment_id``), each query cut to its top
+    ``k`` per segment. Returns the frame ``(query_id, doc_id, raw_score``
+    ``[, profile columns])``, or None when no query has a term."""
+    opts = index.manifest.opts
+    plans = [plan_query(q, mode, opts) for q in queries]
+    terms = sorted({t for p in plans for t, _ in p.terms})
+    if not terms:
+        return None
+    from .delete import tombstone_broadcast
+    kernel = make_kernel(plans, index.manifest.total_docs, k, opts,
+                         max(index.manifest.avgdl, 1e-9),
+                         deleted_bc=tombstone_broadcast(index),
+                         round_to=round_to)
+    static_df, df_accum = _global_dfs(index, terms)
     postings = _read_postings(index, terms)
-    if phrase_occs is None:
+    if mode != "phrase":
         postings = _drop_positions(postings)
-    out_schema = "doc_id long, raw_score double, n_terms int"
-    if profile:
-        out_schema += (", segment_id string, blocks_decoded long, "
-                       "blocks_predecoded long, "
-                       "blocks_total long, pos_blocks_decoded long, "
-                       "pos_blocks_total long")
     if static_df is None:
         # cold terms — still exactly ONE job: global per-term doc_freq via
         # a window aggregate (tiny — only the query terms' dictionary rows
-        # flow through it) feeds the per-segment scoring kernel, and the
-        # kernels ship {term: gdf} back through an accumulator with the
-        # SAME job's task results. The cache fills when the user executes
-        # the query; the next query on these terms skips the window.
-        from pyspark.sql import Window
-        rows = postings.withColumn(
+        # flow through it) feeds the per-segment kernels
+        postings = postings.withColumn(
             "gdf", F.sum("doc_freq").over(Window.partitionBy("term")))
-        local = rows.groupBy("segment_id").applyInPandas(kernel, out_schema)
-        pend = getattr(index, "_pending_df_accums", [])
-        pend.append((ver, list(terms), df_accum))
-        index._pending_df_accums = pend[-8:]
-    else:
-        local = postings.groupBy("segment_id").applyInPandas(kernel, out_schema)
-    return local, k
+    schema = "query_id int, doc_id long, raw_score double"
+    if profile:
+        schema += "".join(f", {c} long" for c in _PROFILE_COLS)
+    return postings.groupBy("segment_id").applyInPandas(
+        _spark_kernel(kernel, plans, static_df, df_accum, profile), schema)
 
 
 def search_index(index: "Bm25Index", query: str, k: int | None | str = 10,
                  mode: str = "or", round_to: int = 4) -> DataFrame:
-    local, k = _search_local(index, query, k, mode, round_to, profile=False)
+    k = _resolve_k(k, index.manifest.opts)
+    local = _search_plan(index, [query], mode, k, round_to, profile=False)
     if local is None:
         return index.spark.createDataFrame([], "doc_id long, score double")
     result = local.select(
@@ -974,174 +940,6 @@ def search_index(index: "Bm25Index", query: str, k: int | None | str = 10,
     if k is not None:
         result = result.limit(k)
     return result
-
-
-def search_profiled(index: "Bm25Index", query: str, k: int | None | str = 10,
-                    mode: str = "or", round_to: int = 4):
-    """Eager search returning (top-k pandas frame, BMW stats dict) — the
-    reference's ``log_bmw_stats`` analogue. Stats count posting blocks
-    actually decoded vs present across all query terms and segments."""
-    local, k = _search_local(index, query, k, mode, round_to, profile=True)
-    if local is None:
-        return (pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")}),
-                {"blocks_decoded": 0, "blocks_total": 0,
-                 "pos_blocks_decoded": 0, "pos_blocks_total": 0,
-                 "segments": 0})
-    pdf = local.toPandas()
-    # every segment kernel emits exactly one sentinel row (n_terms == -1)
-    # carrying its counters — segments whose docs were ALL pruned still
-    # report, so stats never undercount
-    seg = pdf[pdf["n_terms"] == -1]
-    stats = {"blocks_decoded": int(seg["blocks_decoded"].sum()),
-             "blocks_predecoded": int(seg["blocks_predecoded"].sum()),
-             "blocks_total": int(seg["blocks_total"].sum()),
-             "pos_blocks_decoded": int(seg["pos_blocks_decoded"].sum()),
-             "pos_blocks_total": int(seg["pos_blocks_total"].sum()),
-             "segments": int(len(seg))}
-    pdf = pdf[pdf["n_terms"] != -1]
-    pdf = pdf.assign(score=pdf["raw_score"].round(round_to))
-    pdf = pdf.sort_values(["score", "doc_id"], ascending=[False, True])
-    if k is not None:
-        pdf = pdf.head(k)
-    index.last_bmw_stats = stats
-    return pdf[["doc_id", "score"]].reset_index(drop=True), stats
-
-
-def make_batch_kernel(per_query: list[list[tuple[str, float]]], n_docs: int,
-                      k: int, opts: Bm25Options, avgdl: float,
-                      round_to: int = 4, profile: bool = False,
-                      deleted_bc=None, static_df: dict[str, int] | None = None,
-                      reader_cache: dict | None = None):
-    """Build the batched-retrieval kernel (shared by the Spark
-    ``search_batch`` path, one call per segment, and the driver-local
-    serving path, one call over every segment's rows). ``per_query``:
-    tokenized (term, qfreq) lists. Each query's output is already cut to
-    its top k. Global doc_freq comes from ``static_df``
-    when given (serving path / warm cache), else from the window-attached
-    ``gdf`` column."""
-    n = int(n_docs)
-    k1, b = float(opts.k1), float(opts.b)
-    block_size = opts.block_size
-    codec = opts.codec
-    eps = 10.0 ** (-round_to)
-
-    norm_len = DECODE_TABLE.astype(np.float64)
-    denom_norm = k1 * (1.0 - b + b * norm_len / avgdl)
-
-    def kernel(key, pdf):
-        as_arrays = not isinstance(pdf, pd.DataFrame)   # serving fast path
-        if as_arrays and profile:
-            raise ValueError("array fast path does not carry profile "
-                             "columns — use the DataFrame path")
-        empty_cols = {"query_id": np.empty(0, np.int32),
-                      "doc_id": np.empty(0, np.int64),
-                      "raw_score": np.empty(0, np.float64)}
-        deleted = getattr(deleted_bc, "value", deleted_bc)
-
-        # ONE lazily-decoding reader per term, SHARED across all queries of
-        # the batch: the per-query MaxScore/block-max passes below decide
-        # which blocks each query needs; a block decodes at most once no
-        # matter how many queries touch its term. This is the
-        # per-query early termination the reference's BMW gives its batch
-        # loop (src/scoring/bmw.c:1477-1716), grafted onto a shared decode
-        # cache so the batch amortization is kept too.
-        counters = {"decoded": 0}
-        recs = (pdf.sort_values(["term", "shard"]).to_dict("records")
-                if isinstance(pdf, pd.DataFrame) else pdf)
-        per_term: dict[str, list[dict]] = {}
-        for rec in recs:
-            per_term.setdefault(rec["term"], []).append(rec)
-        if static_df is not None:
-            gdf = {t: int(static_df[t]) for t in per_term}
-        else:
-            gdf = {t: int(rows_[0]["gdf"]) for t, rows_ in per_term.items()}
-        readers = _readers_for(per_term, block_size, codec, denom_norm, k1,
-                               deleted, counters, reader_cache)
-
-        out_q, out_id, out_sc = [], [], []
-        for qi, qterms in enumerate(per_query):
-            sub = {t: readers[t] for t, _ in qterms if t in readers}
-            if not sub:
-                continue
-            weights = {t: qf * idf(n, gdf[t]) for t, qf in qterms
-                       if t in readers}
-            res = _run_maxscore(sub, weights, k, eps)
-            if res is None:
-                continue
-            uniq, scores, _counts = res
-            if uniq.size > k:
-                sel = _top_k(uniq, scores, k, round_to)
-                uniq, scores = uniq[sel], scores[sel]
-            out_q.append(np.full(uniq.size, qi, dtype=np.int32))
-            out_id.append(uniq)
-            out_sc.append(scores)
-        if as_arrays:
-            if out_q:
-                return (np.concatenate(out_q), np.concatenate(out_id),
-                        np.concatenate(out_sc))
-            return (empty_cols["query_id"], empty_cols["doc_id"],
-                    empty_cols["raw_score"])
-        if out_q:
-            out = pd.DataFrame({"query_id": np.concatenate(out_q),
-                                "doc_id": np.concatenate(out_id),
-                                "raw_score": np.concatenate(out_sc)})
-        else:
-            out = pd.DataFrame(empty_cols)
-        if profile:
-            sent = pd.DataFrame({"query_id": np.array([-1], dtype=np.int32),
-                                 "doc_id": np.array([-1], dtype=np.int64),
-                                 "raw_score": np.array([0.0])})
-            out = pd.concat([out, sent], ignore_index=True) if len(out) else sent
-            out["segment_id"] = str(key[0])
-            out["blocks_decoded"] = np.int64(counters["decoded"])
-            out["blocks_predecoded"] = np.int64(
-                counters.get("predecoded", 0))
-            out["blocks_total"] = np.int64(sum(
-                int(r["num_blocks"]) for r in recs))
-        return out
-
-    return kernel
-
-
-def tokenize_batch(queries: list[str], opts: Bm25Options
-                   ) -> tuple[list[list[tuple[str, float]]], set[str]]:
-    """Tokenize a query batch: (per-query (term, qfreq) lists, union of
-    terms)."""
-    per_query: list[list[tuple[str, float]]] = []
-    all_terms: set[str] = set()
-    for q in queries:
-        qt = tokenize_query(q, opts.text_config)
-        per_query.append([(t, float(f)) for t, f in qt])
-        all_terms.update(t for t, _ in qt)
-    return per_query, all_terms
-
-
-def _search_batch_local(index: "Bm25Index", queries: list[str], k: int,
-                        round_to: int, profile: bool):
-    """Shared plan builder for batched retrieval: per-segment kernel output
-    (query_id, doc_id, raw_score[, profile cols]) or None for empty input."""
-    opts = index.manifest.opts
-    per_query, all_terms = tokenize_batch(queries, opts)
-    if not all_terms:
-        return None
-
-    from .delete import tombstone_broadcast
-    kernel = make_batch_kernel(
-        per_query, index.manifest.total_docs, k, opts,
-        max(index.manifest.avgdl, 1e-9), round_to=round_to, profile=profile,
-        deleted_bc=tombstone_broadcast(index))
-
-    out_schema = "query_id int, doc_id long, raw_score double"
-    if profile:
-        out_schema += (", segment_id string, blocks_decoded long, "
-                       "blocks_predecoded long, blocks_total long")
-
-    postings = _drop_positions(_read_postings(index, sorted(all_terms)))
-    from pyspark.sql import Window
-    rows = postings.withColumn(
-        "gdf", F.sum("doc_freq").over(Window.partitionBy("term")))
-    return rows.groupBy("segment_id").applyInPandas(kernel, out_schema)
 
 
 def search_batch(index: "Bm25Index", queries: list[str], k: int = 10,
@@ -1154,26 +952,71 @@ def search_batch(index: "Bm25Index", queries: list[str], k: int = 10,
     throughput-correct shape on a cluster: union the query terms, scan the
     index once, then run per-query MaxScore + block-max early termination
     against a shared per-term decode cache (each block decodes at most once
-    per segment), and take all per-query global top-ks with a single window.
+    per segment). The per-segment top-ks (at most segments x queries x k
+    rows) meet in one partition, sorted there, and each query keeps its
+    first k — no window, no range-partitioning sample job.
 
     Returns (query_id, doc_id, score) with query_id = position in
     ``queries``, ordered by (query_id, score DESC, doc_id ASC). All cuts
     (per-segment and global) order by the ROUNDED score, mirroring
     ``search_index`` and the oracle, so k-boundary ties agree.
     """
-    local = _search_batch_local(index, queries, k, round_to, profile=False)
+    local = _search_plan(index, queries, "or", k, round_to, profile=False)
     if local is None:
         return index.spark.createDataFrame(
             [], "query_id int, doc_id long, score double")
-    from pyspark.sql import Window
-    w = (Window.partitionBy("query_id")
-         .orderBy(F.desc(F.round(F.col("raw_score"), round_to)),
-                  F.asc("doc_id")))
-    return (local.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "doc_id",
-                    F.round(F.col("raw_score"), round_to).alias("score"))
-            .orderBy("query_id", F.desc("score"), F.asc("doc_id")))
+
+    def first_k(batches):
+        parts = list(batches)
+        if parts:
+            pdf = pd.concat(parts, ignore_index=True)
+            yield pdf[pdf.groupby("query_id").cumcount() < k]
+
+    return (local.select("query_id", "doc_id",
+                         F.round(F.col("raw_score"), round_to).alias("score"))
+            .repartition(1)
+            .sortWithinPartitions("query_id", F.desc("score"), F.asc("doc_id"))
+            .mapInPandas(first_k, "query_id int, doc_id long, score double"))
+
+
+def _search_profiled(index: "Bm25Index", queries: list[str], mode: str,
+                     k: int | None, round_to: int, keys: tuple[str, ...]):
+    """Eager search returning ((query_id, doc_id, score) pandas frame, BMW
+    stats) — the reference's ``log_bmw_stats`` analogue. Every segment
+    kernel emits exactly one sentinel row (query_id -1) carrying its
+    counters, split back out here: segments whose docs were ALL pruned
+    still report, so stats never undercount. ``keys`` names the counters
+    summed into the stats, next to ``segments``."""
+    local = _search_plan(index, queries, mode, k, round_to, profile=True)
+    if local is None:
+        return (pd.DataFrame({"query_id": pd.Series(dtype="int32"),
+                              "doc_id": pd.Series(dtype="int64"),
+                              "score": pd.Series(dtype="float64")}),
+                dict.fromkeys((*keys, "segments"), 0))
+    pdf = local.toPandas()
+    sent = pdf["query_id"] == -1
+    stats = {c: int(pdf.loc[sent, c].sum()) for c in keys}
+    stats["segments"] = int(sent.sum())
+    pdf = pdf[~sent]
+    pdf = pdf.assign(score=pdf["raw_score"].round(round_to))
+    pdf = pdf.sort_values(["query_id", "score", "doc_id"],
+                          ascending=[True, False, True])
+    if k is not None:
+        pdf = pdf.groupby("query_id", sort=True).head(k)
+    index.last_bmw_stats = stats
+    return (pdf[["query_id", "doc_id", "score"]].reset_index(drop=True),
+            stats)
+
+
+def search_profiled(index: "Bm25Index", query: str, k: int | None | str = 10,
+                    mode: str = "or", round_to: int = 4):
+    """Eager search returning (top-k pandas frame, BMW stats dict). Stats
+    count posting blocks actually decoded vs present across all query
+    terms and segments, and positions-sidecar blocks for phrase queries."""
+    pdf, stats = _search_profiled(index, [query], mode,
+                                  _resolve_k(k, index.manifest.opts),
+                                  round_to, _PROFILE_COLS)
+    return pdf[["doc_id", "score"]], stats
 
 
 def search_batch_profiled(index: "Bm25Index", queries: list[str], k: int = 10,
@@ -1182,23 +1025,5 @@ def search_batch_profiled(index: "Bm25Index", queries: list[str], k: int = 10,
     counterpart of :func:`search_profiled`. Counters count each block's
     decode once per segment (shared across the batch's queries), so
     ``blocks_decoded < blocks_total`` demonstrates batch-path pruning."""
-    local = _search_batch_local(index, queries, k, round_to, profile=True)
-    if local is None:
-        return (pd.DataFrame({"query_id": pd.Series(dtype="int32"),
-                              "doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")}),
-                {"blocks_decoded": 0, "blocks_total": 0, "segments": 0})
-    pdf = local.toPandas()
-    seg = pdf[pdf["query_id"] == -1]
-    stats = {"blocks_decoded": int(seg["blocks_decoded"].sum()),
-             "blocks_predecoded": int(seg["blocks_predecoded"].sum()),
-             "blocks_total": int(seg["blocks_total"].sum()),
-             "segments": int(len(seg))}
-    pdf = pdf[pdf["query_id"] != -1]
-    pdf = pdf.assign(score=pdf["raw_score"].round(round_to))
-    pdf = pdf.sort_values(["query_id", "score", "doc_id"],
-                          ascending=[True, False, True])
-    pdf = pdf.groupby("query_id", sort=True).head(k)
-    index.last_bmw_stats = stats
-    return (pdf[["query_id", "doc_id", "score"]].reset_index(drop=True),
-            stats)
+    return _search_profiled(index, queries, "or", k, round_to,
+                            _PROFILE_COLS[:3])

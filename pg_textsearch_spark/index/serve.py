@@ -5,21 +5,26 @@ scheduling floor (~0.5-1 s even on local[32]) dominates single-query
 latency no matter how little work the query does — round 3 measured
 0.7-0.9 s/query against the reference's 5-178 ms (BASELINE.md). The
 index artifacts, however, are plain Parquet plus an atomically-renamed
-JSON manifest, and the scoring kernels (``make_segment_kernel`` /
-``make_batch_kernel``: MaxScore + block-max over lazily decoded blocks)
-are plain numpy. :class:`LocalSearcher` reads the SAME files with
-pyarrow and runs the SAME kernels in-process. Results are pinned
-identical to ``search_index`` / ``search_batch`` in tests and
-oracle-checked by the driver (``bm25_topk_served``).
+JSON manifest, and the scoring kernel (``query.make_kernel``: MaxScore +
+block-max over lazily decoded blocks) is plain numpy. :class:`LocalSearcher`
+reads the SAME files with pyarrow and runs the SAME kernel in-process.
+Results are pinned identical to ``search_index`` / ``search_batch`` in
+tests and oracle-checked by the driver (``bm25_topk_served``).
 
-One pass per query. The kernels are segment-agnostic (a term's reader
-spans every shard row it is handed, each with its own doc range, and
-doc ids are unique across segments), so ``search`` and ``search_batch``
-hand ONE kernel call the fetched rows of every segment: one MaxScore
-pass whose blocks are ranked by bound across the whole index, one
-running kth, one top-k heap — the reference's single cross-segment BMW
-scan (reference src/scoring/bmw.c:1477-1716). A cold segment's
-blocks are never decoded once the running kth passes their bounds.
+One pass per query. ``search`` is a batch of one query plan
+(``query.plan_query``), so ``search`` and ``search_batch`` share one
+code path (``_score``): fetch the plans' terms, hand ONE kernel call the
+fetched rows of every segment as row dicts, and order the arrays it
+returns. The kernel is segment-agnostic (a term's reader spans every
+shard row it is handed, each with its own doc range, and doc ids are
+unique across segments): one MaxScore pass whose blocks are ranked by
+bound across the whole index, one running kth, one top-k heap per query
+— the reference's single cross-segment BMW scan (reference
+src/scoring/bmw.c:1477-1716). A cold segment's blocks are never decoded
+once the running kth passes their bounds. The kernel factory is bound
+here under two names, ``make_segment_kernel`` (called by ``search``) and
+``make_batch_kernel`` (called by ``search_batch``), which the
+benchmark's tracing hooks wrap as separate spans.
 Tombstones are one sorted id array (``delete.live_deletes``); decoded
 readers are cached per term and die with the term's cache entry.
 
@@ -63,8 +68,10 @@ import pandas as pd
 from .build import DOCS_DIR, POSTINGS_DIR
 from .delete import DELETES_DIR, live_deletes
 from .manifest import MANIFEST_NAME, Manifest
-from .query import (POSITION_COLS, _holds, _resolve_k, _segments_holding,
-                    make_batch_kernel, make_segment_kernel, tokenize_batch)
+from .query import POSITION_COLS, _holds, _resolve_k, _segments_holding
+from .query import make_kernel as make_batch_kernel
+from .query import make_kernel as make_segment_kernel
+from .query import plan_query
 from ..functions.tokenizer import tokenize_query
 
 _EMPTY = {"doc_id": "int64", "score": "float64"}
@@ -113,7 +120,7 @@ def _read_groups(path: str, md, rgs: list[int], columns=None):
 def _row_dicts(tbl) -> list[dict]:
     """Row dicts straight from an Arrow table. Scalars and binaries become
     Python objects; list columns (the per-block skip arrays) become numpy
-    views of the column's flat values, the representation the kernels'
+    views of the column's flat values, the representation the kernel's
     ``np.asarray`` calls take without a copy."""
     import pyarrow as pa
     cols = []
@@ -259,7 +266,7 @@ class LocalSearcher:
         return out, gdf
 
     def _forget_evicted(self, terms) -> None:
-        """Drop the readers a kernel just built for terms the LRU already
+        """Drop the readers the kernel just built for terms the LRU already
         evicted (a query or batch with more terms than ``cache_terms``),
         so the reader cache never outgrows the term cache."""
         for t in terms:
@@ -268,11 +275,10 @@ class LocalSearcher:
 
     @staticmethod
     def _by_segment(rows: dict[str, list[dict]]) -> list[dict]:
-        """The kernels' ONE record list: every fetched row of every term,
+        """The kernel's ONE record list: every fetched row of every term,
         across all segments, each term's rows in the (segment_id, shard)
-        order :meth:`_fetch` keeps (the kernels' list fast path — no
-        pandas frame per query). The name predates the single pass; the
-        benchmark's tracing hooks bind it."""
+        order :meth:`_fetch` keeps (no pandas frame per query). The name
+        predates the single pass; the benchmark's tracing hooks bind it."""
         return [r for rws in rows.values() for r in rws]
 
     def resolve(self, results: pd.DataFrame,
@@ -356,73 +362,53 @@ class LocalSearcher:
     def search(self, query: str, k: int | None | str = 10, mode: str = "or",
                round_to: int = 4) -> pd.DataFrame:
         """Top-k for one query; identical results, ordering and tie rules
-        to ``Bm25Index.search`` (pinned in tests/test_serve.py). ONE kernel
-        call scores the rows of every segment. ``last_stats`` reports the
-        distinct segments whose rows reached it."""
+        to ``Bm25Index.search`` (pinned in tests/test_serve.py): a batch
+        of one plan. ``last_stats`` reports the distinct segments whose
+        rows reached the kernel."""
         self.refresh()
         self.last_stats = {"segments_visited": 0}   # also for early returns
         opts = self.manifest.opts
         k = _resolve_k(k, opts)
-        qterms = tokenize_query(query, opts.text_config)
-        if not qterms:
+        plan = plan_query(query, mode, opts, tokenize_query)
+        if not plan.terms:
             return _empty(_EMPTY)
-        terms = [t for t, _ in qterms]
-        qfreqs = {t: float(f) for t, f in qterms}
+        _, ids, sc = self._score(make_segment_kernel, [plan], k, round_to)
+        if not ids.size:
+            return _empty(_EMPTY)
+        return pd.DataFrame({"doc_id": ids, "score": sc}, copy=False)
 
-        phrase_occs = None
-        if mode == "phrase":
-            if not opts.store_positions:
-                raise ValueError("phrase search requires an index built "
-                                 "with store_positions=True")
-            from ..spark_utils import _tokenize_with_positions
-            ts, _, _, ps = _tokenize_with_positions(query, opts.text_config,
-                                                    {})
-            occ = [(t, p) for t, pl in zip(ts, ps) for p in pl]
-            base = min(p for _, p in occ)
-            phrase_occs = [(t, p - base) for t, p in occ]
+    def search_batch(self, queries: list[str], k: int = 10,
+                     round_to: int = 4) -> pd.DataFrame:
+        """Batched disjunctive top-k; the same kernel and output as the
+        Spark ``search_batch`` (a block decodes at most once across the
+        whole batch), each query with its own MaxScore pass and running
+        kth."""
+        self.refresh()
+        opts = self.manifest.opts
+        plans = [plan_query(q, "or", opts) for q in queries]
+        if not any(p.terms for p in plans):
+            return _empty(_EMPTY_BATCH)
+        qid, ids, sc = self._score(make_batch_kernel, plans, k, round_to)
+        if not qid.size:
+            return _empty(_EMPTY_BATCH)
+        return pd.DataFrame({"query_id": qid, "doc_id": ids, "score": sc},
+                            copy=False)
 
+    def _score(self, make, plans, k, round_to):
+        """ONE kernel call, built by ``make``, over the fetched rows of
+        every segment: (query_id, doc_id, rounded score) arrays ordered
+        query_id ASC, score DESC, doc_id ASC."""
+        terms = list(dict.fromkeys(t for p in plans for t, _ in p.terms))
         rows, gdf = self._fetch(terms)
         tomb = self._tombstones()   # may clear self._readers — call first
         recs = self._by_segment(rows)
         self.last_stats = {
             "segments_visited": len({r["segment_id"] for r in recs})}
-        kernel = make_segment_kernel(
-            qfreqs, self.manifest.total_docs, k, opts,
-            max(self.manifest.avgdl, 1e-9), mode, phrase_occs,
-            deleted_bc=tomb, static_df=gdf,
-            round_to=round_to, reader_cache=self._readers)
-        ids, sc = kernel((None,), recs)     # already cut to k
+        kernel = make(plans, self.manifest.total_docs, k, self.manifest.opts,
+                      max(self.manifest.avgdl, 1e-9), deleted_bc=tomb,
+                      round_to=round_to, reader_cache=self._readers)
+        qid, ids, sc = kernel(gdf, recs)    # each query already cut to k
         self._forget_evicted(rows)
-        if not ids.size:
-            return _empty(_EMPTY)
         sc = np.round(sc, round_to)
-        order = np.lexsort((ids, -sc))      # score DESC, doc_id ASC
-        return pd.DataFrame({"doc_id": ids[order], "score": sc[order]},
-                            copy=False)
-
-    def search_batch(self, queries: list[str], k: int = 10,
-                     round_to: int = 4) -> pd.DataFrame:
-        """Batched disjunctive top-k; same shared-decode-cache kernel as
-        the Spark ``search_batch`` (a block decodes at most once across
-        the whole batch), same output and ordering. ONE kernel call scores
-        every query over the rows of every segment; each query gets its
-        own MaxScore pass and running kth."""
-        self.refresh()
-        opts = self.manifest.opts
-        per_query, all_terms = tokenize_batch(queries, opts)
-        if not all_terms:
-            return _empty(_EMPTY_BATCH)
-        rows, gdf = self._fetch(sorted(all_terms))
-        tomb = self._tombstones()   # may clear self._readers — call first
-        kernel = make_batch_kernel(
-            per_query, self.manifest.total_docs, k, opts,
-            max(self.manifest.avgdl, 1e-9), round_to=round_to,
-            deleted_bc=tomb, static_df=gdf, reader_cache=self._readers)
-        qid, ids, sc = kernel((None,), self._by_segment(rows))
-        self._forget_evicted(rows)
-        if not qid.size:
-            return _empty(_EMPTY_BATCH)
-        sc = np.round(sc, round_to)
-        o = np.lexsort((ids, -sc, qid))     # qid ASC, score DESC, doc ASC
-        return pd.DataFrame({"query_id": qid[o], "doc_id": ids[o],
-                             "score": sc[o]}, copy=False)
+        o = np.lexsort((ids, -sc, qid))
+        return qid[o], ids[o], sc[o]

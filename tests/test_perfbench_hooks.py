@@ -45,6 +45,8 @@ def test_perfbench_wraps_record_every_span(idx):
         run.Run.install_kernel_wraps(stub)
         with tr.span("op"):
             first = srv.search("alpha w3", k=5)
+        with tr.span("op"):
+            srv.search("alpha beta", k=5, mode="and")
         with tr.span("batch_op"):
             srv.search_batch(["alpha beta", "w2 gamma", "nosuchterm"], k=5)
         idx.delete([int(first["doc_id"].iloc[0])])

@@ -124,6 +124,45 @@ def test_cold_query_is_one_spark_job(spark, tmp_path):
                          opts=Bm25Options(text_config="simple"), k=5))
 
 
+def test_warm_batch_query_is_one_spark_job(spark, tmp_path):
+    """A warm Spark ``search_batch`` reuses the driver's df cache like a
+    single query: ONE job whose executed plan has no window — neither the
+    cold path's global-df window nor a per-query top-k window — and the
+    same results as the cold batch and the serving path."""
+    from pg_textsearch_spark.index.query import search_batch
+    docs = _corpus(spark, n=120)
+    idx = Bm25Index.build(spark, docs, "content", str(tmp_path / "batch"),
+                          id_col="id",
+                          opts=Bm25Options(text_config="simple"),
+                          num_segments=2)
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    qs = ["hello fox", "lazy dog code", "banana", "nosuchterm"]
+
+    def jobs_for(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return st.getJobIdsForGroup(group), out
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        _, cold = jobs_for("batch-cold",
+                           lambda: search_batch(idx, qs, k=5).toPandas())
+        warm_df = search_batch(idx, qs, k=5)
+        plan = warm_df._jdf.queryExecution().executedPlan().toString()
+        assert "Window" not in plan, plan
+        jobs, warm = jobs_for("batch-warm", warm_df.toPandas)
+        assert len(jobs) == 1, f"warm batch ran {len(jobs)} jobs: {jobs}"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert warm.equals(cold)
+    assert warm.equals(idx.serving().search_batch(qs, k=5))
+
+
 def test_lsh_hot_bucket_guard_bounds_mega_duplicates(spark):
     """A crawl-style corpus with one huge exact-duplicate cluster must not
     make the LSH band joins quadratic: with max_band_docs set, the

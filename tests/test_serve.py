@@ -281,16 +281,15 @@ def test_batch_search_ships_no_positions_column(idx):
     # a positions index: no non-phrase Spark query ships the positions
     # sidecar through applyInPandas (column pruning keeps it out of the
     # scan), and batch search still equals serving
-    from pg_textsearch_spark.index.query import (
-        POSITION_COLS, _search_batch_local, _search_local)
+    from pg_textsearch_spark.index.query import POSITION_COLS, _search_plan
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
     qs = ["quick brown", "lazy dog river", "ember"]
-    phrase, _ = _search_local(idx, "quick brown", 5, "phrase", 4, False)
+    phrase = _search_plan(idx, ["quick brown"], "phrase", 5, 4, False)
     assert all(c in plan(phrase) for c in POSITION_COLS)
-    single, _ = _search_local(idx, "quick brown", 5, "or", 4, False)
-    for p in (plan(single), plan(_search_batch_local(idx, qs, 5, 4, False))):
+    single = _search_plan(idx, ["quick brown"], "or", 5, 4, False)
+    for p in (plan(single), plan(_search_plan(idx, qs, "or", 5, 4, False))):
         assert "pos_counts_bin" not in p and "pos_deltas_bin" not in p \
             and "skip_pos_off" not in p
     got = idx.serving().search_batch(qs, k=5)
