@@ -175,7 +175,12 @@ def main() -> None:
         shutil.rmtree(mpath)
     shutil.copytree(idx.path, mpath)
     midx = Bm25Index(spark, mpath)
-    midx.force_merge()
+    # the compaction itself: wall time and Spark job count of one
+    # force_merge of every built segment
+    t0 = time.time()
+    merge_facts = task_facts(spark, midx.force_merge)
+    extra_serve["force_merge_s"] = round(time.time() - t0, 3)
+    extra_serve["force_merge_spark_jobs"] = merge_facts["jobs"]
     msrv = midx.serving()
     for q in batch_qs[:10]:
         msrv.search(q, k=10)

@@ -64,18 +64,18 @@ PACK_STATS_SCHEMA = T.StructType([
 POSTINGS_DIR = "postings"
 DOCS_DIR = "docs"
 
-# Postings file layout. Rows are written (term, shard)-sorted in row groups
-# of at most POSTINGS_ROW_GROUP_ROWS rows, so each group's footer `term`
-# min/max bounds a contiguous slice of the dictionary: a serving replica's
-# cold-term fetch reads only the groups whose range can hold the term
-# (the reference's dictionary-page + posting-block reads). Statistics are
-# kept on `term` alone (the only column anything filters on) and dictionary
-# encoding on `segment_id` alone (one value per file; every other column is
-# near-unique per row). Smaller groups cost footer bytes and compression
-# context: at 2 048 rows the zstd level below is what keeps a 7-segment,
-# ~9.7 k-row-per-segment index no larger than the one-group layout. Merges
-# write the same (term, shard) order and row-group bound with Spark's writer
-# (merge.py), keeping Spark's default codec and statistics.
+# Postings file layout, written by ONE function (``write_postings``) for
+# built and merged segments alike. Rows are (term, shard)-sorted in row
+# groups of at most POSTINGS_ROW_GROUP_ROWS rows, so each group's footer
+# `term` min/max bounds a contiguous slice of the dictionary: a serving
+# replica's cold-term fetch reads only the groups whose range can hold the
+# term (the reference's dictionary-page + posting-block reads). Statistics
+# are kept on `term` alone (the only column anything filters on) and
+# dictionary encoding on `segment_id` alone (one value per file; every
+# other column is near-unique per row). Smaller groups cost footer bytes
+# and compression context: at 2 048 rows the zstd level below is what
+# keeps a 7-segment, ~9.7 k-row-per-segment index no larger than the
+# one-group layout.
 POSTINGS_ROW_GROUP_ROWS = 2048
 POSTINGS_ZSTD_LEVEL = 9
 
@@ -101,40 +101,55 @@ def _postings_arrow_schema(with_positions: bool):
     return pa.schema(fields)
 
 
-def write_segment_files(seg_dir: str, packed: pd.DataFrame,
-                        docs: pd.DataFrame, with_positions: bool) -> int:
-    """Write postings + per-segment docmap parquet dirs, return bytes.
+def _tmp_path(path: str) -> str:
+    """A hidden temp name next to ``path`` (its directory is created),
+    unique per call: a retried or speculative task attempt never writes
+    into another attempt's file, and Spark's and the serving path's
+    listings skip it (leading dot, no ``.parquet`` suffix)."""
+    import uuid
+    d, base = os.path.split(path)
+    os.makedirs(d, exist_ok=True)
+    return os.path.join(d, f".{base}.{uuid.uuid4().hex[:12]}.tmp")
 
-    Files land under temp names first; the marker is written last by the
-    caller (finalize-then-mark). Postings/docs are parquet *directories* so
-    merge jobs can write them with Spark's native writer too."""
+
+def write_postings(path: str, chunks, with_positions: bool,
+                   row_group_rows: int | None = None) -> int:
+    """Write packed postings frames into ONE parquet file at ``path`` in
+    the layout above; returns its size in bytes. ``chunks`` is an iterable
+    of frames (``segment_id`` + the packed columns), each (term, shard)-
+    sorted and following the previous one in term order; it is consumed
+    one frame at a time, so a caller can stream a partition through one
+    writer. No frames still writes a readable, empty file. The file is put
+    in place with ``os.replace``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    schema = _postings_arrow_schema(with_positions)
+    tmp = _tmp_path(path)
+    with pq.ParquetWriter(tmp, schema, compression="zstd",
+                          compression_level=POSTINGS_ZSTD_LEVEL,
+                          use_dictionary=["segment_id"],
+                          write_statistics=["term"],
+                          sorting_columns=[pq.SortingColumn(1)]) as w:
+        for packed in chunks:
+            w.write_table(pa.Table.from_pandas(packed, schema=schema,
+                                               preserve_index=False),
+                          row_group_size=row_group_rows
+                          or POSTINGS_ROW_GROUP_ROWS)
+    os.replace(tmp, path)
+    return os.path.getsize(path)
 
-    pdir = os.path.join(seg_dir, POSTINGS_DIR)
-    ddir = os.path.join(seg_dir, DOCS_DIR)
-    os.makedirs(pdir, exist_ok=True)
-    os.makedirs(ddir, exist_ok=True)
-    # ``packed`` comes (term, shard)-sorted out of pack_postings_frame
-    table = pa.Table.from_pandas(packed, schema=_postings_arrow_schema(with_positions),
-                                 preserve_index=False)
-    ppath = os.path.join(pdir, "part-0.parquet")
-    pq.write_table(table, ppath + ".tmp", compression="zstd",
-                   compression_level=POSTINGS_ZSTD_LEVEL,
-                   row_group_size=POSTINGS_ROW_GROUP_ROWS,
-                   use_dictionary=["segment_id"], write_statistics=["term"],
-                   sorting_columns=[pq.SortingColumn(1)])
-    os.replace(ppath + ".tmp", ppath)
 
-    # docmap: doc_id-sorted; statistics on doc_id let resolve() skip row
-    # groups. No dictionaries: most columns are unique per row (ids,
-    # content_sha256), where a dictionary only adds an index stream
-    dpath = os.path.join(ddir, "part-0.parquet")
-    dt = pa.Table.from_pandas(docs, preserve_index=False)
-    pq.write_table(dt, dpath + ".tmp", compression="zstd",
-                   use_dictionary=False, write_statistics=["doc_id"])
-    os.replace(dpath + ".tmp", dpath)
-    return os.path.getsize(ppath) + os.path.getsize(dpath)
+def write_docs(path: str, table) -> int:
+    """Write one doc_id-sorted docmap Arrow ``table`` to ``path``; returns
+    its size in bytes. Statistics on doc_id let resolve() skip row groups.
+    No dictionaries: most columns are unique per row (ids,
+    content_sha256), where a dictionary only adds an index stream."""
+    import pyarrow.parquet as pq
+    tmp = _tmp_path(path)
+    pq.write_table(table, tmp, compression="zstd", use_dictionary=False,
+                   write_statistics=["doc_id"])
+    os.replace(tmp, path)
+    return os.path.getsize(path)
 
 
 def _pack_segment_pdf(pdf: pd.DataFrame, seg_id: str, seg_dir: str,
@@ -182,7 +197,13 @@ def _pack_segment_pdf(pdf: pd.DataFrame, seg_id: str, seg_dir: str,
                                  with_positions=with_positions,
                                  codec=opts.codec)
     packed.insert(0, "segment_id", seg_id)
-    nbytes = write_segment_files(seg_dir, packed, docs, with_positions)
+    import pyarrow as pa
+    # files first; the marker is written last (finalize-then-mark)
+    nbytes = (write_postings(os.path.join(seg_dir, POSTINGS_DIR,
+                                          "part-0.parquet"),
+                             [packed], with_positions)
+              + write_docs(os.path.join(seg_dir, DOCS_DIR, "part-0.parquet"),
+                           pa.Table.from_pandas(docs, preserve_index=False)))
 
     dfreqs = packed.groupby("term")["doc_freq"].sum() if len(packed) else pd.Series(dtype=np.int64)
     max_df = int(dfreqs.max()) if len(dfreqs) else 0

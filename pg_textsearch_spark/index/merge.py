@@ -1,242 +1,241 @@
-"""LSM segment merges (reference operators M1-M3, M5).
+"""LSM segment merges (reference operators M1-M3, M5): an N-way
+term-sorted cursor walk (src/segment/merge.c:1409-1891), tiered compaction
+(merge.c:1896-1944) and force-merge (merge.c:1951-1972).
 
-The reference merges 8 same-level segments into one next-level segment by an
-N-way term-sorted cursor walk (src/segment/merge.c:1409-1891) and recurses
-when a level fills (tiered compaction, src/segment/merge.c:1896-1944).
-``bm25_force_merge`` collapses everything to one segment
-(src/segment/merge.c:1951-1972).
-
-Spark-first re-expression: a merge is one job —
-
-  read input segments' postings (columnar)
-    -> decode to posting rows in Arrow batches (mapInPandas, streaming)
-    -> repartition by (term, salt) where salt = doc_id DIV salt_span —
-       SALTED REPARTITIONING: a mega-term (common keyword) is split into
-       bounded doc-range groups instead of one skewed reducer, and because
-       salt is a doc_id prefix the groups re-assemble deterministically as
-       consecutive shard rows
-    -> pack each group (same block/skip/varbyte layout as the base build)
-    -> write the new segment with Spark's parquet writer
-    -> commit manifest (remove inputs, add output), then delete input dirs
-       (the reference's tombstone-then-free, src/segment/tombstone.c).
-
-Doc ids are globally unique and segments are disjoint doc sets, so merging
-never remaps ids (the reference must remap because its ids are
-segment-local, merge.c:658-882 — our global-id design removes the problem).
+A merge is two ``mapInArrow`` passes that write the new segment with the
+build's writers and return the stats its record is summed from; nothing is
+read back. Postings: compressed shard rows get a doc-range salt (a
+mega-term spreads over up to N_SALTS groups), are range-partitioned on
+(term, salt), sorted (term, salt, min_doc_id), decoded, stripped of
+tombstoned docs, re-packed per salt and written one file per partition.
+Docs: tombstones dropped, sorted by doc_id, written; no shuffle.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from collections import Counter
+from itertools import chain
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from ..config import Bm25Options
+from . import build
+from .build import DOCS_DIR, POSTINGS_DIR, write_docs, write_postings
 from .manifest import SEG_MARKER, SegmentRecord
 from .segment import decode_positions, decode_row, pack_postings_frame
 
-def _merge_group_packer(opts: Bm25Options, seg_id: str, n_salts: int,
-                        deleted_bc):
-    """applyInPandas body for one (term, salt) group of PACKED shard rows:
-    decode each input row (vectorized), drop tombstoned docs, concatenate,
-    re-sort by doc_id, re-pack. The shuffle moves compressed shard rows —
-    never per-posting rows — so merge shuffle volume ≈ index size, not
-    postings count. Tombstones arrive via a Spark broadcast (once per
-    executor), not inside the task closure."""
-    block_size = opts.block_size
+# doc-range groups per term; merged shard id = shard * N_SALTS + salt
+N_SALTS = 32
+# postings a task holds before it packs them at a (term, salt) boundary
+FLUSH_POSTINGS = 1 << 20
+
+_POSTINGS_STATS = pa.schema([
+    (c, pa.string() if c.endswith("term") else pa.int64()) for c in (
+        "bytes num_postings min_doc_id max_doc_id first_term first_df "
+        "last_term last_df inner_terms inner_max_df").split()])
+_DOCS_STATS = "bytes long, num_docs long, total_len long, total_qlen long"
+
+
+def _postings_pass(seg_id: str, out_dir: str, opts, deleted_bc,
+                   row_group_rows: int):
+    """mapInArrow body over one partition of (term, salt, min_doc_id)-
+    sorted shard rows: decode, drop tombstoned docs, re-pack per salt and
+    stream the packed chunks into one part file. Yields a stats row per
+    chunk: its inner terms are whole (a term's rows are contiguous across
+    chunks and partitions); its first and last carry partial dfs."""
     with_pos = opts.store_positions
-    codec = opts.codec
 
-    def pack_group(key, pdf):
-        term, salt = key[0], int(key[1])
-        deleted = None
-        if deleted_bc is not None:
-            deleted = getattr(deleted_bc, "value", deleted_bc)
-        ids_l, tfs_l, norms_l, pos_l = [], [], [], []
-        for r in pdf.to_dict("records"):
-            ids, tfs, norms = decode_row(r, block_size, codec)
-            if deleted is not None and deleted.size and ids.size:
-                p = np.searchsorted(deleted, ids)
-                p[p >= deleted.size] = deleted.size - 1
-                alive = deleted[p] != ids
-                if with_pos:
-                    pos = decode_positions(r) or []
-                    pos_l.extend(pl for pl, a in zip(pos, alive) if a)
-                ids, tfs, norms = ids[alive], tfs[alive], norms[alive]
-            elif with_pos:
-                pos = decode_positions(r) or []
-                pos_l.extend(pos)
-            ids_l.append(ids); tfs_l.append(tfs); norms_l.append(norms)
-        ids = np.concatenate(ids_l) if ids_l else np.empty(0, np.int64)
-        if ids.size == 0:
-            empty = pack_postings_frame(pd.DataFrame(
-                {"doc_id": [], "term": [], "tf": [], "fieldnorm": [],
-                 "positions": []}), block_size, with_positions=with_pos,
-                codec=codec)
-            empty.insert(0, "segment_id", seg_id)
-            return empty
-        tfs = np.concatenate(tfs_l)
-        norms = np.concatenate(norms_l)
-        frame = {"doc_id": ids, "term": np.repeat(term, ids.size),
-                 "tf": tfs, "fieldnorm": norms}
+    def pack(rows: list, deleted, stats: list):
+        n = [r[2].size for r in rows]
+        frame = {"term": np.repeat(np.array([r[0] for r in rows], object), n),
+                 "salt": np.repeat([r[1] for r in rows], n)}
+        for i, c in enumerate(("doc_id", "tf", "fieldnorm"), 2):
+            frame[c] = np.concatenate([r[i] for r in rows])
         if with_pos:
-            # element-wise fill: np.asarray(..., object) goes 2D when all
-            # position lists happen to share a length, which pandas rejects
-            pos_arr = np.empty(len(pos_l), dtype=object)
-            for i, p in enumerate(pos_l):
-                pos_arr[i] = p
-            frame["positions"] = pos_arr
-        packed = pack_postings_frame(pd.DataFrame(frame), block_size,
-                                     with_positions=with_pos, codec=codec)
-        # unique shard ids across salts of the same term; doc-range order
-        # is carried by min_doc_id (the query kernel never assumes shard
-        # ranges are disjoint, only that docs are unique per term)
-        packed["shard"] = packed["shard"].to_numpy() * n_salts + salt
-        packed.insert(0, "segment_id", seg_id)
-        return packed
+            frame["positions"] = np.empty(frame["doc_id"].size, object)
+            frame["positions"][:] = [p for r in rows for p in r[5]]
+        frame = pd.DataFrame(frame)
+        if deleted is not None:
+            frame = frame[~np.isin(frame["doc_id"].to_numpy(), deleted)]
+        if not len(frame):
+            return None
+        parts = []
+        for salt, g in frame.groupby("salt"):
+            packed = pack_postings_frame(g, opts.block_size, codec=opts.codec,
+                                         with_positions=with_pos)
+            packed["shard"] = packed["shard"] * N_SALTS + int(salt)
+            parts.append(packed)
+        out = pd.concat(parts).sort_values(["term", "shard"],
+                                           ignore_index=True)
+        out.insert(0, "segment_id", seg_id)
+        terms, starts = np.unique(out["term"].to_numpy(), return_index=True)
+        dfs = np.add.reduceat(out["doc_freq"].to_numpy(np.int64), starts)
+        stats.append(dict(
+            num_postings=int(dfs.sum()), inner_terms=max(terms.size - 2, 0),
+            inner_max_df=int(dfs[1:-1].max(initial=0)),
+            min_doc_id=int(out["min_doc_id"].min()),
+            max_doc_id=int(out["last_doc_id"].max()),
+            first_term=str(terms[0]), first_df=int(dfs[0]),
+            last_term=str(terms[-1]),   # a one-term chunk's df is first_df
+            last_df=int(dfs[-1]) if terms.size > 1 else 0))
+        return out
 
-    return pack_group
+    def run(batches):
+        deleted = getattr(deleted_bc, "value", None)
+        stats: list[dict] = []
+
+        def chunks():
+            rows, key, held = [], None, 0
+            for b in batches:
+                cols = b.to_pydict()
+                for i, term in enumerate(cols["term"]):
+                    row = {c: v[i] for c, v in cols.items()}
+                    if (term, row["salt"]) != key:
+                        if held >= FLUSH_POSTINGS:
+                            yield pack(rows, deleted, stats)
+                            rows, held = [], 0
+                        key = (term, row["salt"])
+                    ids, tfs, norms = decode_row(row, opts.block_size,
+                                                 opts.codec)
+                    rows.append((term, row["salt"], ids, tfs, norms,
+                                 decode_positions(row) if with_pos else None))
+                    held += ids.size
+            if rows:
+                yield pack(rows, deleted, stats)
+
+        packed = (c for c in chunks() if c is not None)
+        first = next(packed, None)
+        if first is not None:
+            part = TaskContext.get().partitionId()
+            stats[0]["bytes"] = write_postings(
+                os.path.join(out_dir, f"part-{part:05d}.parquet"),
+                chain([first], packed), with_pos, row_group_rows)
+            yield pa.RecordBatch.from_pylist(stats, schema=_POSTINGS_STATS)
+
+    return run
 
 
-def merge_segments(index, seg_records: list[SegmentRecord], out_level: int,
-                   n_salts: int = 32) -> SegmentRecord:
+def _docs_pass(out_dir: str, schema, deleted_bc):
+    """mapInArrow body over one partition of docmap rows: drop tombstoned
+    docs, sort by doc_id, write one part file with ``schema``."""
+    def run(batches):
+        from ..functions.fieldnorm import DECODE_TABLE
+        tbl = pa.Table.from_batches([b.cast(schema) for b in batches], schema)
+        deleted = getattr(deleted_bc, "value", None)
+        if deleted is not None:
+            tbl = tbl.filter(~np.isin(tbl["doc_id"].to_numpy(), deleted))
+        if not tbl.num_rows:
+            return
+        tbl = tbl.sort_by("doc_id")
+        part = TaskContext.get().partitionId()
+        path = os.path.join(out_dir, f"part-{part:05d}.parquet")
+        yield pa.RecordBatch.from_pylist([{
+            "bytes": write_docs(path, tbl), "num_docs": tbl.num_rows,
+            "total_len": int(tbl["doc_len"].to_numpy().sum()),
+            # Σ quantized lengths — avgdl_mode='quantized' divides by N
+            "total_qlen": int(DECODE_TABLE[
+                tbl["fieldnorm"].to_numpy().astype(np.int64)].sum())}])
+
+    return run
+
+
+def merge_segments(index, seg_records: list[SegmentRecord],
+                   out_level: int) -> SegmentRecord:
     """Merge the given segments into one new segment at out_level."""
-    spark = index.spark
-    manifest = index.manifest
-    opts = manifest.opts
+    from .delete import load_deletes
+    spark, manifest, opts = index.spark, index.manifest, index.manifest.opts
     seg_id = manifest.new_segment_id()
     seg_dir = manifest.segment_dir(seg_id)
+    pdir, ddir = (os.path.join(seg_dir, d) for d in (POSTINGS_DIR, DOCS_DIR))
+    in_dirs = [manifest.segment_dir(s.segment_id) for s in seg_records]
 
-    in_postings = [os.path.join(manifest.segment_dir(s.segment_id), "postings")
-                   for s in seg_records]
-    in_docs = [os.path.join(manifest.segment_dir(s.segment_id), "docs")
-               for s in seg_records]
-
+    # tombstones (M4, src/segment/merge.c:839-866) in the inputs' doc-id
+    # range: one broadcast for both passes, sized by the merged slice
     lo = min(s.min_doc_id for s in seg_records)
     hi = max(s.max_doc_id for s in seg_records)
-    salt_span = max(1, (hi - lo + 1) // n_salts)
-
-    rows = spark.read.parquet(*in_postings)
-
-    # tombstones (M4: the reference's dead-doc elimination at merge,
-    # src/segment/merge.c:839-866): masked inside the group packer after
-    # block decode — shard rows stay packed through the shuffle
-    from .delete import load_deletes
     deleted = load_deletes(index)
-    # slice to the ids that can occur in THIS merge's inputs (the union of
-    # the input segments' doc-id ranges) — the broadcast scales with the
-    # churn of the merged slice, not the index-lifetime tombstone total
-    # (same locality the query path gets from live_deletes)
-    if deleted.size:
-        s_lo = np.searchsorted(deleted, lo, side="left")
-        s_hi = np.searchsorted(deleted, hi, side="right")
-        deleted = deleted[s_lo:s_hi]
+    deleted = deleted[np.searchsorted(deleted, lo, side="left"):
+                      np.searchsorted(deleted, hi, side="right")]
     deleted_bc = (spark.sparkContext.broadcast(deleted)
                   if deleted.size else None)
-    deleted = deleted if deleted.size else None
 
-    # SALTED REPARTITIONING: shuffle by (term, doc-range salt of the shard
-    # row's min_doc_id) so a mega-term (common keyword) spreads over up to
-    # n_salts reducers instead of one skewed reducer. Rows stay compressed:
-    # merge shuffle volume ~= index bytes, not postings count.
-    salted = rows.withColumn(
-        "salt",
-        F.least(F.lit(int(n_salts - 1)),
-                F.floor((F.col("min_doc_id").cast("double") - float(lo))
-                        / float(salt_span)).cast("int")))
-
-    pack_group = _merge_group_packer(opts, seg_id, n_salts, deleted_bc)
-
-    from .build import POSTINGS_ROW_GROUP_ROWS
-    spark_schema = ("segment_id string, term string, shard long, "
-                    "min_doc_id long, last_doc_id long, doc_freq int, "
-                    "num_blocks int, doc_ids_bin binary, tfs_bin binary, "
-                    "norms_bin binary, skip_last_doc_id array<long>, "
-                    "skip_doc_count array<int>, skip_max_tf array<int>, "
-                    "skip_min_norm array<int>, skip_doc_off array<long>, "
-                    "skip_tf_off array<long>, pos_counts_bin binary, "
-                    "pos_deltas_bin binary, skip_pos_off array<long>")
-    packed = (salted.groupBy("term", "salt")
-              .applyInPandas(pack_group, spark_schema))
-    # same layout as a built segment: each part file (term, shard)-sorted
-    # in row groups of at most POSTINGS_ROW_GROUP_ROWS rows, so serving's
-    # footer-range pruning applies to merged segments too (a hash-shuffled
-    # part file otherwise spans the whole vocabulary in one row group)
-    (packed.sortWithinPartitions("term", "shard").write.mode("overwrite")
-     .option("parquet.block.row.count.limit", POSTINGS_ROW_GROUP_ROWS)
-     .parquet(os.path.join(seg_dir, "postings")))
-
-    docs = spark.read.parquet(*in_docs)
-    if deleted is not None:
-        from .delete import deletes_df
-        dels = deletes_df(index)
-        docs = docs.join(dels, "doc_id", "left_anti")
-    docs.write.mode("overwrite").parquet(os.path.join(seg_dir, "docs"))
+    # postings: only the columns a re-pack reads (the skip lists are
+    # rebuilt), with the schema given so Spark infers nothing
+    cols = ("term string, min_doc_id long, doc_freq int, doc_ids_bin binary,"
+            " tfs_bin binary, norms_bin binary")
+    if opts.store_positions:
+        cols += ", pos_counts_bin binary, pos_deltas_bin binary"
+    salt_span = max(1, (hi - lo + 1) // N_SALTS)
+    salt = F.least(F.lit(N_SALTS - 1), F.floor(
+        (F.col("min_doc_id").cast("double") - float(lo)) / float(salt_span)
+    ).cast("int"))
+    pstats = (spark.read.schema(cols)
+              .parquet(*[os.path.join(d, POSTINGS_DIR) for d in in_dirs])
+              .withColumn("salt", salt)
+              .repartitionByRange("term", "salt")
+              .sortWithinPartitions("term", "salt", "min_doc_id")
+              .mapInArrow(_postings_pass(seg_id, pdir, opts, deleted_bc,
+                                         build.POSTINGS_ROW_GROUP_ROWS),
+                          from_arrow_schema(_POSTINGS_STATS))
+              .collect())
+    # docs: one schema for every part, the union of the inputs' columns
+    # (an append batch may lack a build's metadata column)
+    docs = (spark.read.option("mergeSchema", "true")
+            .parquet(*[os.path.join(d, DOCS_DIR) for d in in_dirs]))
+    schema = to_arrow_schema(docs.schema)
+    dstats = (docs.mapInArrow(_docs_pass(ddir, schema, deleted_bc),
+                              _DOCS_STATS).collect())
     if deleted_bc is not None:
         deleted_bc.unpersist()
+    # a merge that dropped every doc still leaves readable, empty dirs
+    if not pstats:
+        write_postings(os.path.join(pdir, "part-00000.parquet"), [],
+                       opts.store_positions)
+    if not dstats:
+        write_docs(os.path.join(ddir, "part-00000.parquet"),
+                   schema.empty_table())
 
-    # stats for the manifest record
-    st = spark.read.parquet(os.path.join(seg_dir, "postings")).agg(
-        F.countDistinct("term").alias("num_terms"),
-        F.sum("doc_freq").alias("num_postings"),
-        F.min("min_doc_id").alias("min_id"),
-        F.max("last_doc_id").alias("max_id"),
-        F.min("term").alias("term_min"),
-        F.max("term").alias("term_max"),
-    ).collect()[0]
-    from ..functions.fieldnorm import DECODE_TABLE
-    qlen_col = F.element_at(
-        F.array(*[F.lit(int(v)) for v in DECODE_TABLE]),
-        F.col("fieldnorm").cast("int") + 1).cast("long")
-    dstats = spark.read.parquet(os.path.join(seg_dir, "docs")).agg(
-        F.count(F.lit(1)).alias("num_docs"),
-        F.sum("doc_len").alias("total_len"),
-        F.sum(qlen_col).alias("total_qlen"),
-    ).collect()[0]
-    tstats = (spark.read.parquet(os.path.join(seg_dir, "postings"))
-              .groupBy("term").agg(F.sum("doc_freq").alias("df"))
-              .agg(F.max("df").alias("max_df"), F.avg("df").alias("mean_df"))
-              .collect()[0])
-    nbytes = sum(os.path.getsize(os.path.join(dp, f))
-                 for base in ("postings", "docs")
-                 for dp in [os.path.join(seg_dir, base)]
-                 for f in os.listdir(dp) if f.endswith(".parquet"))
-
+    # exact term stats: join the chunks' edge terms, add their inner terms
+    edges = Counter()
+    for r in pstats:
+        edges[r["first_term"]] += r["first_df"]
+        edges[r["last_term"]] += r["last_df"]
+    num_terms = sum(r["inner_terms"] for r in pstats) + len(edges)
+    num_postings = sum(r["num_postings"] for r in pstats)
+    max_df = max([r["inner_max_df"] for r in pstats] + list(edges.values()),
+                 default=0)
+    batch_ids = {b for s in seg_records for b in (
+        s.lineage.get("batch_id"), *(s.lineage.get("batch_ids") or ()))}
     rec = SegmentRecord(
         segment_id=seg_id, level=out_level,
-        num_docs=int(dstats["num_docs"]), total_len=int(dstats["total_len"] or 0),
-        total_qlen=int(dstats["total_qlen"] or 0),
-        num_terms=int(st["num_terms"] or 0), num_postings=int(st["num_postings"] or 0),
-        bytes=int(nbytes),
-        min_doc_id=int(st["min_id"] if st["min_id"] is not None else 0),
-        max_doc_id=int(st["max_id"] if st["max_id"] is not None else 0),
-        max_doc_freq=int(tstats["max_df"] or 0),
-        skew_factor=float((tstats["max_df"] or 0) / tstats["mean_df"]) if tstats["mean_df"] else 0.0,
-        term_min=str(st["term_min"] or ""), term_max=str(st["term_max"] or ""),
-        lineage={"kind": "merge", "inputs": [s.segment_id for s in seg_records],
-                 "n_salts": n_salts,
-                 # carry every streaming batch id the inputs ingested, so
-                 # append_batch's replay-idempotency check survives
-                 # compaction (a retried micro-batch must stay a no-op
-                 # after its L0 segment was merged away)
-                 "batch_ids": sorted({
-                     b for s in seg_records
-                     for b in ([s.lineage.get("batch_id")]
-                               + list(s.lineage.get("batch_ids") or []))
-                     if b is not None})},
-    )
-    import json
+        **{c: sum(r[c] for r in dstats)
+           for c in ("num_docs", "total_len", "total_qlen")},
+        num_terms=num_terms, num_postings=num_postings,
+        bytes=sum(r["bytes"] or 0 for r in pstats + dstats),
+        min_doc_id=min((r["min_doc_id"] for r in pstats), default=0),
+        max_doc_id=max((r["max_doc_id"] for r in pstats), default=0),
+        max_doc_freq=max_df,
+        skew_factor=(max_df / (num_postings / num_terms)
+                     if num_postings else 0.0),
+        term_min=min(edges, default=""), term_max=max(edges, default=""),
+        # the inputs' batch ids: a replayed streaming batch stays a no-op
+        lineage={"kind": "merge", "batch_ids": sorted(batch_ids - {None}),
+                 "inputs": [s.segment_id for s in seg_records]})
     with open(os.path.join(seg_dir, SEG_MARKER), "w") as f:
         json.dump(rec.to_dict(), f)
 
     # atomic manifest swap, then reclaim input dirs (M5)
     manifest.replace_segments({s.segment_id for s in seg_records}, [rec])
     manifest.save()
-    for s in seg_records:
-        shutil.rmtree(manifest.segment_dir(s.segment_id), ignore_errors=True)
+    for d in in_dirs:
+        shutil.rmtree(d, ignore_errors=True)
     return rec
 
 

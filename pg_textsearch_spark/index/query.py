@@ -827,12 +827,18 @@ def _global_dfs(index: "Bm25Index", terms: list[str]):
     to the postings rows and the kernel calls ride them back through
     ``df_accum`` with the same job's task results; the cache drains such
     accumulators from queries the user has since executed, without ever
-    running a second job."""
-    ver = (index.manifest.updated_at, len(index.manifest.segments))
+    running a second job. A term no segment's term range can hold has df
+    0, cached here on the driver; a query whose terms are already pending
+    shares that accumulator instead of adding one."""
+    segs = index.manifest.segments
+    ver = (index.manifest.updated_at, len(segs))
     cached = getattr(index, "_df_cache", None)
     if cached is None or cached[0] != ver:
         index._df_cache = (ver, {})
     dfc = index._df_cache[1]
+    for t in terms:
+        if t not in dfc and not _segments_holding(segs, [t]):
+            dfc[t] = 0
     still = []
     for pver, pterms, acc in getattr(index, "_pending_df_accums", []):
         if pver != ver:
@@ -847,7 +853,10 @@ def _global_dfs(index: "Bm25Index", terms: list[str]):
     if all(t in dfc for t in terms):
         index._pending_df_accums = still[-8:]
         return {t: dfc[t] for t in terms}, None
-    acc = index.spark.sparkContext.accumulator({}, _DictMergeParam())
+    acc = next((a for _, pt, a in still if pt == list(terms)), None)
+    if acc is None:
+        acc = index.spark.sparkContext.accumulator({}, _DictMergeParam())
+    still = [p for p in still if p[2] is not acc]
     index._pending_df_accums = (still + [(ver, list(terms), acc)])[-8:]
     return None, acc
 
@@ -943,8 +952,8 @@ def search_index(index: "Bm25Index", query: str, k: int | None | str = 10,
 
 
 def search_batch(index: "Bm25Index", queries: list[str], k: int = 10,
-                 round_to: int = 4) -> DataFrame:
-    """Score MANY queries in ONE Spark job (disjunctive top-k each).
+                 round_to: int = 4, mode: str = "or") -> DataFrame:
+    """Score MANY queries in ONE Spark job (top-k each, in ``mode``).
 
     The reference's batch benchmark runs 691 queries back-to-back over one
     connection (BASELINE.md single-client batch); per-query Spark jobs pay
@@ -961,7 +970,7 @@ def search_batch(index: "Bm25Index", queries: list[str], k: int = 10,
     (per-segment and global) order by the ROUNDED score, mirroring
     ``search_index`` and the oracle, so k-boundary ties agree.
     """
-    local = _search_plan(index, queries, "or", k, round_to, profile=False)
+    local = _search_plan(index, queries, mode, k, round_to, profile=False)
     if local is None:
         return index.spark.createDataFrame(
             [], "query_id int, doc_id long, score double")

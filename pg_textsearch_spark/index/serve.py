@@ -378,14 +378,14 @@ class LocalSearcher:
         return pd.DataFrame({"doc_id": ids, "score": sc}, copy=False)
 
     def search_batch(self, queries: list[str], k: int = 10,
-                     round_to: int = 4) -> pd.DataFrame:
-        """Batched disjunctive top-k; the same kernel and output as the
+                     round_to: int = 4, mode: str = "or") -> pd.DataFrame:
+        """Batched top-k in ``mode``; the same kernel and output as the
         Spark ``search_batch`` (a block decodes at most once across the
-        whole batch), each query with its own MaxScore pass and running
-        kth."""
+        whole batch), each query with its own pass (MaxScore and a running
+        kth for ``or``)."""
         self.refresh()
         opts = self.manifest.opts
-        plans = [plan_query(q, "or", opts) for q in queries]
+        plans = [plan_query(q, mode, opts) for q in queries]
         if not any(p.terms for p in plans):
             return _empty(_EMPTY_BATCH)
         qid, ids, sc = self._score(make_batch_kernel, plans, k, round_to)

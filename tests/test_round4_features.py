@@ -163,6 +163,39 @@ def test_warm_batch_query_is_one_spark_job(spark, tmp_path):
     assert warm.equals(idx.serving().search_batch(qs, k=5))
 
 
+def test_absent_terms_leave_at_most_one_pending_df_entry(spark, tmp_path):
+    """A term no segment's [term_min, term_max] can hold is cached as df 0
+    on the driver, so its query plans no window; a repeated query whose
+    terms stay pending (in range, but in no posting) shares ONE
+    accumulator; real queries' dfs still drain into the cache."""
+    idx = Bm25Index.build(spark, _corpus(spark, n=60), "content",
+                          str(tmp_path / "dfc"), id_col="id",
+                          opts=Bm25Options(text_config="simple"),
+                          num_segments=2)
+
+    def pending(terms):
+        return sum(t == terms for _, t, _ in idx._pending_df_accums)
+
+    for q in ("aardvark", "zzz", "dogz"):   # below, above, inside ranges
+        for run in range(4):
+            df = idx.search(q, k=5)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert df.collect() == []
+            assert pending([q]) <= 1
+            if q != "dogz" and run:
+                assert "Window" not in plan, plan
+    assert idx._df_cache[1]["aardvark"] == idx._df_cache[1]["zzz"] == 0
+    real = _rows(idx.search("hello fox", k=5))
+    assert real
+    idx.search("banana", k=5).collect()   # drains the executed queries
+    want = {r["term"]: r["doc_freq"] for r in
+            idx.term_stats(["hello", "fox"]).collect()}
+    assert {t: idx._df_cache[1][t] for t in want} == want
+    warm = idx.search("hello fox", k=5)
+    assert "Window" not in warm._jdf.queryExecution().executedPlan().toString()
+    assert _rows(warm) == real
+
+
 def test_lsh_hot_bucket_guard_bounds_mega_duplicates(spark):
     """A crawl-style corpus with one huge exact-duplicate cluster must not
     make the LSH band joins quadratic: with max_band_docs set, the

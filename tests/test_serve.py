@@ -312,6 +312,26 @@ def _tie_text(i):
     return "tie marker words" if i % 50 == 0 else _text(i)
 
 
+def test_batch_and_phrase_modes_equal_per_query_search(idx):
+    """``mode=`` on both ``search_batch``s: every query of an ``and`` or
+    ``phrase`` batch equals its own ``search`` on both paths."""
+    srv = idx.serving()
+    qs = ["quick brown", "lazy dog", "brown fox jumps", "nosuchterm",
+          "quick brown fox", "dog lazy"]
+    for mode in ("and", "phrase"):
+        spark_b = search_batch(idx, qs, k=5, mode=mode).toPandas()
+        serve_b = srv.search_batch(qs, k=5, mode=mode)
+        hits = 0
+        for qi, q in enumerate(qs):
+            want = spark_rows(idx.search(q, k=5, mode=mode))
+            hits += bool(want)
+            for got in (spark_b, serve_b):
+                assert serve_rows(got[got["query_id"] == qi]) == want, \
+                    (mode, q)
+            assert serve_rows(srv.search(q, k=5, mode=mode)) == want
+        assert hits >= 3, mode
+
+
 def test_single_pass_matches_spark_on_many_segments(spark, tmp_path):
     docs = spark.createDataFrame([(i, _tie_text(i)) for i in range(1, 601)],
                                  "id long, content string")
